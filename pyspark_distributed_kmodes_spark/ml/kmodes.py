@@ -6,24 +6,36 @@ Reference (reconstructed, SURVEY.md §2 Part A): an RDD ensemble k-modes
 k-modes via `rdd.mapPartitionsWithIndex` + closure-pickled Cluster
 objects, then a driver-local meta-clustering of the P×k partition modes.
 
+Every fit here runs the same convergence loop, `_lloyd`: repeat one
+batch Lloyd step (assign each row to its nearest mode, then re-take
+each column's most frequent value per cluster) until the modes stop
+moving or `max_iter` steps have run. Two steps plug into it:
+
+- `_numpy_step` — weighted, over per-column sorted dictionary codes on
+  the driver or in a Python worker.
+- `KModes._recompute_modes` on `KModesModel.transform` — one Spark job
+  per step (broadcast-literal assign, melt → weighted count → argmax
+  re-mode), for inputs too large to collect.
+
 This module provides BOTH:
 
-- `KModes` — a global Lloyd-style k-modes on DataFrames. Replaces the
-  reference's incremental per-partition bookkeeping (A3/A5) with
-  batch assign (broadcast modes → argmin of Hamming distance, A1/A4)
-  and batch re-mode (melt → count → argmax per (cluster, column), A2).
-  One Spark job per iteration, same barrier structure as the reference
-  (SURVEY.md §3.1 E1) but Catalyst-planned, with persist + checkpoint
-  discipline and no Python in the hot path.
+- `KModes` — a global Lloyd-style k-modes on DataFrames. The objective
+  depends only on the distinct value combinations and their counts, so
+  `fit` aggregates the input once to a persisted weighted combo table
+  and runs the numpy step on it when it has at most `COMBO_THRESHOLD`
+  rows, else the Spark step. Replaces the reference's incremental
+  per-partition bookkeeping (A3/A5) with batch assign (A1/A4) and
+  batch re-mode (A2).
 - `EnsembleKModes` — reference-parity two-level ensemble: independent
-  local k-modes per partition group (applyInPandas, numpy inside),
+  local k-modes per partition group (applyInPandas, numpy step inside),
   modes collected (provably tiny: P×k rows) and meta-clustered on the
   driver, exactly the reference's fit() shape (A6/A9) with Arrow
   instead of closure pickling.
 
-Determinism: seeded hash-sort init (`xxhash64(features, seed)`), argmin
-ties → lowest cluster index, mode ties → lexicographically smallest
-value. Fixed seed ⇒ identical model on any cluster size.
+Determinism: seeded init (blake2b over the combos on the numpy path,
+`xxhash64(features, seed)` on the Spark path), argmin ties → lowest
+cluster index, mode ties → smallest value, an empty cluster keeps its
+mode. Fixed seed ⇒ identical model on any cluster size.
 """
 
 from __future__ import annotations
@@ -148,14 +160,78 @@ class KModesModel:
         )
 
 
+def _lloyd(step, modes: list, max_iter: int) -> tuple[list, int, bool]:
+    """The convergence loop of every fit: apply `step` (modes → next
+    modes) until it returns its input unchanged, or `max_iter` times.
+    Returns (modes, steps run, whether a fixed point was reached)."""
+    n_iter = 0
+    for n_iter in range(1, max_iter + 1):
+        new_modes = step(modes)
+        if new_modes == modes:
+            return modes, n_iter, True
+        modes = new_modes
+    return modes, n_iter, False
+
+
+def _encode(columns) -> tuple[list[np.ndarray], np.ndarray]:
+    """Dictionary-encode each column over its sorted distinct values:
+    (per-column vocabularies, (rows, cols) int codes). Code order is
+    value order, so "lowest code" means "smallest value"."""
+    vocab, codes = [], []
+    for col in columns:
+        values, inverse = np.unique(np.asarray(col, dtype=object), return_inverse=True)
+        vocab.append(values)
+        codes.append(inverse.reshape(-1))
+    return vocab, np.stack(codes, axis=1)
+
+
+def _tuples(codes: np.ndarray) -> list[tuple[int, ...]]:
+    """Modes as `_lloyd` compares them: a list of code tuples."""
+    return [tuple(m) for m in codes.tolist()]
+
+
+def _decode(vocab: list[np.ndarray], modes: list) -> list[tuple[str, ...]]:
+    return [tuple(vocab[j][c] for j, c in enumerate(m)) for m in modes]
+
+
+def _distances(codes: np.ndarray, modes) -> np.ndarray:
+    """(rows, k) Hamming distance of every coded row to every mode."""
+    return (codes[:, None, :] != np.asarray(modes)[None, :, :]).sum(axis=2)
+
+
+def _numpy_step(codes: np.ndarray, weights: np.ndarray | None = None):
+    """Weighted Lloyd step over dictionary codes; modes are lists of
+    code tuples. Assign: argmin Hamming, ties → lowest cluster index.
+    Re-mode: per (cluster, column) argmax of summed weight (one
+    bincount per column), ties → lowest code; an empty cluster keeps
+    its mode. `weights` None counts each row once."""
+    sizes = codes.max(axis=0) + 1
+
+    def step(modes: list) -> list:
+        k = len(modes)
+        assign = _distances(codes, modes).argmin(axis=1)
+        new = np.array(modes)
+        filled = np.bincount(assign, minlength=k) > 0
+        for j, size in enumerate(sizes):
+            tally = np.bincount(assign * size + codes[:, j], weights=weights, minlength=k * size)
+            new[filled, j] = tally.reshape(k, size)[filled].argmax(axis=1)
+        return _tuples(new)
+
+    return step
+
+
 class KModes:
     """Global Lloyd k-modes estimator on a DataFrame of categorical cols.
 
-    Scale design: per iteration, ONE job — assign is a broadcast-style
-    literal expression (k modes × n_cols comparisons, no join shuffle),
-    re-mode melts to (cluster, col, value) and counts (single shuffle of
-    size ≤ k × n_cols × distinct_values after map-side combine). Input
-    persisted once; lineage cut via localCheckpoint every 10 iters.
+    Scale design: the input is aggregated once (one map-side-combined
+    shuffle) to a weighted combo table, which is persisted for the fit.
+    Up to COMBO_THRESHOLD combos it is collected through Arrow and the
+    numpy step iterates on the driver with no Spark job per iteration.
+    Beyond that each iteration is one Spark job over the combo table:
+    assign is a broadcast-style literal expression (k modes × n_cols
+    comparisons, no join shuffle), re-mode melts to (cluster, col,
+    value) and sums the weights (single shuffle of size ≤ k × n_cols ×
+    distinct_values after map-side combine).
     """
 
     # Above this many distinct value-combinations the weighted local
@@ -169,13 +245,12 @@ class KModes:
         self.max_iter = int(max_iter)
         self.seed = int(seed)
 
-    def _init_modes(self, feats: DataFrame) -> list[tuple[str, ...]]:
-        """Seeded deterministic init: k distinct rows ordered by a seeded
-        hash (the reference uses rdd.takeSample — fit():~300; hash-sort
-        is its deterministic equivalent)."""
+    def _init_modes(self, combos: DataFrame) -> list[tuple[str, ...]]:
+        """Seeded deterministic init: the first k of the (distinct) combos
+        ordered by a seeded hash (the reference uses rdd.takeSample —
+        fit():~300; hash-sort is its deterministic equivalent)."""
         rows = (
-            feats.distinct()
-            .orderBy(F.xxhash64(*[F.col(c) for c in self.cols], F.lit(self.seed)), *self.cols)
+            combos.orderBy(F.xxhash64(*[F.col(c) for c in self.cols], F.lit(self.seed)), *self.cols)
             .limit(self.k)
             .collect()
         )
@@ -187,110 +262,81 @@ class KModes:
     def fit(self, df: DataFrame) -> KModesModel:
         """Key scale property of k-modes over CATEGORICAL data: the
         objective depends only on the distinct value-combination counts,
-        not the raw rows. So fit aggregates the 100 TB input to a
-        weighted combo table in ONE shuffle (map-side combined), and —
-        when that table is provably small — iterates Lloyd locally on
-        the weights, identical math, zero per-iteration jobs. Only at
-        extreme combo cardinality does the distributed per-iteration
-        loop (the reference's barrier structure, SURVEY.md §3.1 E1)
-        engage."""
+        not the raw rows. So fit aggregates the input to a weighted
+        combo table (`_w` = rows per combo) in ONE shuffle, persists it,
+        and counts its rows to pick the path: up to COMBO_THRESHOLD
+        combos are collected and iterated with the numpy step; more are
+        iterated in Spark, one job per iteration (the reference's
+        barrier structure, SURVEY.md §3.1 E1), over the combos rather
+        than the raw rows. Both paths run `_lloyd` and minimise the
+        same weighted objective."""
         feats = df.select(*[_feat(c).alias(c) for c in self.cols])
-        combo_df = feats.groupBy(*self.cols).agg(F.count(F.lit(1)).alias("_w"))
-        # a clear error beats "only 0 distinct rows for k=…" downstream
-        # (the limit-collect below already pays the one job either way)
-        # single job: fetch at most threshold+1 combos; a full result
-        # means low cardinality and the weights are exact for ALL rows
-        combos = combo_df.limit(self.COMBO_THRESHOLD + 1).collect()
-        if not combos:
-            raise ValueError("KModes.fit: input DataFrame is empty")
-        if len(combos) <= self.COMBO_THRESHOLD:
-            return self._fit_weighted_local(combos)
-        return self._fit_distributed(feats)
+        combos = feats.groupBy(*self.cols).agg(F.count(F.lit(1)).alias("_w")).persist()
+        try:
+            n_combos = combos.count()
+            if not n_combos:
+                raise ValueError("KModes.fit: input DataFrame is empty")
+            if n_combos <= self.COMBO_THRESHOLD:
+                return self._fit_local(combos)
+            return self._fit_distributed(combos)
+        finally:
+            combos.unpersist()
 
-    def _fit_weighted_local(self, combos) -> KModesModel:
-        """Exact weighted Lloyd on the collected (combo, count) table.
-        Deterministic: same init (seeded hash over combos), argmin ties
-        → lowest cluster index, mode ties → smallest value."""
-        rows = [tuple(r[c] for c in self.cols) for r in combos]
-        weights = np.array([r["_w"] for r in combos], dtype=np.int64)
-        arr = np.array([list(t) for t in rows], dtype=object)
-        # init: mirror _init_modes ordering (xxhash64-equivalent seeded
-        # hash over the distinct combos). xxhash64 isn't available
-        # driver-side; a seeded blake2b over the same tuple is an
-        # equally deterministic stand-in.
+    def _fit_local(self, combos: DataFrame) -> KModesModel:
+        """Exact weighted Lloyd on the collected combo table, with a
+        seeded blake2b hash order over the combos as init (xxhash64
+        isn't available driver-side; blake2b is an equally
+        deterministic stand-in for `_init_modes`' order)."""
         import hashlib
+
+        table = combos.toArrow()
+        values = [table.column(c).to_numpy(zero_copy_only=False) for c in self.cols]
+        weights = table.column("_w").to_numpy()
+        rows = list(zip(*values))
+        if len(rows) < self.k:
+            raise ValueError(f"only {len(rows)} distinct rows for k={self.k}")
 
         def h(t):
             m = hashlib.blake2b(("\x00".join(t) + f"|{self.seed}").encode(), digest_size=8)
             return int.from_bytes(m.digest(), "big")
 
         order = sorted(range(len(rows)), key=lambda i: (h(rows[i]), rows[i]))
-        if len(rows) < self.k:
-            raise ValueError(f"only {len(rows)} distinct rows for k={self.k}")
-        modes = [rows[i] for i in order[: self.k]]
-        n_iter, converged = 0, False
-        for it in range(1, self.max_iter + 1):
-            n_iter = it
-            dists = np.array([[sum(a != b for a, b in zip(row, m)) for m in modes] for row in rows])
-            assign = dists.argmin(axis=1)  # ties → lowest index (argmin semantics)
-            new_modes = []
-            for ci in range(self.k):
-                mask = assign == ci
-                if not mask.any():
-                    new_modes.append(tuple(modes[ci]))
-                    continue
-                members, w = arr[mask], weights[mask]
-                mode_vals = []
-                for j in range(len(self.cols)):
-                    tally: dict = {}
-                    for v, wt in zip(members[:, j], w):
-                        tally[v] = tally.get(v, 0) + int(wt)
-                    top = max(tally.values())
-                    mode_vals.append(min(v for v, c in tally.items() if c == top))
-                new_modes.append(tuple(mode_vals))
-            if new_modes == modes:
-                converged = True
-                break
-            modes = new_modes
-        dists = np.array([[sum(a != b for a, b in zip(row, m)) for m in modes] for row in rows])
-        cost = float((dists.min(axis=1) * weights).sum())
-        return KModesModel(cols=self.cols, modes=modes, cost=cost, n_iter=n_iter, converged=converged)
+        vocab, codes = _encode(values)
+        init = _tuples(codes[order[: self.k]])
+        modes, n_iter, converged = _lloyd(_numpy_step(codes, weights), init, self.max_iter)
+        cost = float(_distances(codes, modes).min(axis=1) @ weights)
+        return KModesModel(self.cols, _decode(vocab, modes), cost, n_iter, converged)
 
-    def _fit_distributed(self, feats: DataFrame) -> KModesModel:
-        """Per-iteration distributed Lloyd (assign via broadcast literal
-        expression, re-mode via melt+count) — the path for combo
-        cardinality beyond driver memory."""
-        feats = feats.persist()
-        try:
-            model = KModesModel(cols=self.cols, modes=self._init_modes(feats))
-            for it in range(1, self.max_iter + 1):
-                assigned = model.transform(feats, "cluster")
-                new_modes = self._recompute_modes(assigned, model.modes)
-                changed = new_modes != model.modes
-                model.modes = new_modes
-                model.n_iter = it
-                if not changed:
-                    model.converged = True
-                    break
-            scored = model.transform(feats, "cluster").select(model.distance_col().alias("d"))
-            model.cost = scored.agg(F.sum("d").cast("double")).first()[0] or 0.0
-            return model
-        finally:
-            feats.unpersist()
+    def _fit_distributed(self, combos: DataFrame) -> KModesModel:
+        """Lloyd with one Spark job per iteration over the persisted
+        combo table — the path for combo cardinality beyond driver
+        memory."""
+
+        def step(modes):
+            return self._recompute_modes(KModesModel(self.cols, modes).transform(combos, "cluster"), modes)
+
+        modes, n_iter, converged = _lloyd(step, self._init_modes(combos), self.max_iter)
+        model = KModesModel(cols=self.cols, modes=modes, n_iter=n_iter, converged=converged)
+        cost = combos.agg(F.sum(model.distance_col() * F.col("_w")).cast("double")).first()[0]
+        model.cost = cost or 0.0
+        return model
 
     def _recompute_modes(self, assigned: DataFrame, old_modes: list) -> list[tuple[str, ...]]:
         """New mode of each cluster = per-attribute argmax of value
-        frequency (reference A2/A3 `get_max_value_key` /
-        `Cluster.update_mode`, batch form). Melt all columns into one
-        (cluster, col, value) count so every attribute's mode comes out
-        of a single shuffle; ties → smallest value (deterministic)."""
+        weight (reference A2/A3 `get_max_value_key` /
+        `Cluster.update_mode`, batch form): `assigned` carries the
+        feature columns, `cluster` and the row weight `_w`. Melt all
+        columns into one (cluster, col, value) weight sum so every
+        attribute's mode comes out of a single shuffle; ties → smallest
+        value (deterministic)."""
         melted = assigned.select(
             "cluster",
+            "_w",
             F.explode(
                 F.array(*[F.struct(F.lit(c).alias("col"), F.col(c).alias("value")) for c in self.cols])
             ).alias("cv"),
-        ).select("cluster", "cv.col", "cv.value")
-        counts = melted.groupBy("cluster", "col", "value").agg(F.count(F.lit(1)).alias("n"))
+        ).select("cluster", "_w", "cv.col", "cv.value")
+        counts = melted.groupBy("cluster", "col", "value").agg(F.sum("_w").alias("n"))
         w = Window.partitionBy("cluster", "col").orderBy(F.col("n").desc(), F.col("value").asc())
         winners = counts.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") == 1).collect()
         by_cluster: dict[int, dict[str, str]] = {}
@@ -329,35 +375,6 @@ def _cao_init(arr: np.ndarray, k: int) -> np.ndarray:
     return arr[centers].copy()
 
 
-def _local_kmodes(
-    arr: np.ndarray, k: int, max_iter: int, rng: np.random.Generator, init: str = "random"
-) -> np.ndarray:
-    """Plain numpy Lloyd k-modes on a small local array of strings.
-    Replaces the reference's `nicodv/kmodes` driver dependency
-    (fit():~360, reconstructed) — same objective, no external package.
-    init='random' mirrors the reference's per-partition takeSample
-    seeding; init='cao' mirrors its nicodv meta-clustering default."""
-    n = len(arr)
-    k = min(k, n)
-    centroids = _cao_init(arr, k) if init == "cao" else arr[rng.choice(n, size=k, replace=False)]
-    assign = np.full(n, -1, dtype=np.int64)
-    for _it in range(max_iter):
-        dists = (arr[:, None, :] != centroids[None, :, :]).sum(axis=2)
-        new_assign = dists.argmin(axis=1)
-        if (new_assign == assign).all():
-            break
-        assign = new_assign
-        for c in range(k):
-            members = arr[assign == c]
-            if len(members) == 0:
-                continue
-            centroids[c] = [
-                min(vals[cnts == cnts.max()])
-                for vals, cnts in (np.unique(col, return_counts=True) for col in members.T)
-            ]
-    return centroids
-
-
 @dataclass
 class EnsembleKModes:
     """Two-level ensemble k-modes with the reference's API shape
@@ -370,6 +387,12 @@ class EnsembleKModes:
     `groupBy(pid).applyInPandas` — Arrow-batched, no closure pickling,
     no per-iteration job storm; the meta step stays driver-local
     because its input is provably tiny (n_partitions × n_clusters rows).
+    Both levels run `_lloyd` with the unweighted numpy step: a group
+    starts from `rng.choice` rows (the reference's per-partition
+    takeSample), the meta step from `_cao_init` (its nicodv default).
+
+    The meta-modes are not refined on the data, as in the reference, so
+    the model reports the meta step's `n_iter` and `converged=False`.
 
     `n_partitions`: None or 0 → derived from the input row count so each
     applyInPandas group holds ≤ MAX_GROUP_ROWS rows. A fixed partition
@@ -411,10 +434,11 @@ class EnsembleKModes:
 
         def run_group(pdf: pd.DataFrame) -> pd.DataFrame:
             group_pid = int(pdf["pid"].iloc[0])
-            arr = pdf[list(cols)].to_numpy(dtype=object)
+            vocab, codes = _encode(pdf[c] for c in cols)
             rng = np.random.default_rng(seed + group_pid)
-            cent = _local_kmodes(arr, k, local_iter, rng)
-            out = pd.DataFrame(cent, columns=list(cols))
+            init = codes[rng.choice(len(codes), size=min(k, len(codes)), replace=False)]
+            modes, _, _ = _lloyd(_numpy_step(codes), _tuples(init), local_iter)
+            out = pd.DataFrame(_decode(vocab, modes), columns=list(cols))
             out.insert(0, "pid", group_pid)
             return out
 
@@ -423,12 +447,11 @@ class EnsembleKModes:
         # dedup identical partition modes before meta-clustering
         # (reference A7 `get_unique_modes_*`, reconstructed)
         uniq = sorted(set(tuple(r[c] for c in cols) for r in collected))
-        arr = np.array([list(t) for t in uniq], dtype=object)
-        rng = np.random.default_rng(seed)
-        # meta step uses Cao density init — the reference's nicodv
-        # KModes default (SURVEY A9) and deterministic without a seed
-        metamodes = _local_kmodes(arr, k, self.max_dist_iter, rng, init="cao")
-        model = KModesModel(cols=cols, modes=[tuple(m) for m in metamodes], n_iter=1, converged=True)
+        if not uniq:
+            raise ValueError("EnsembleKModes.fit: input DataFrame is empty")
+        vocab, codes = _encode(zip(*uniq))
+        metamodes, n_iter, _ = _lloyd(_numpy_step(codes), _tuples(_cao_init(codes, k)), self.max_dist_iter)
+        model = KModesModel(cols=cols, modes=_decode(vocab, metamodes), n_iter=n_iter, converged=False)
         scored = model.transform(feats.drop("pid"), "cluster").select(model.distance_col().alias("d"))
         agg = scored.agg(F.sum("d").cast("double"), F.count(F.lit(1))).first()
         model.cost = (agg[0] or 0.0) / max(agg[1], 1)  # reference exposes MEAN cost (fit():~390)

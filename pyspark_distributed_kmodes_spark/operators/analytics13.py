@@ -322,8 +322,9 @@ def qp02_kmodes_fit_step_trace(spark: SparkSession, sf_dir: str) -> DataFrame:
     combos — count-desc lexicographic, the ql01 rule), run ONE full
     Lloyd iteration through the REAL engine code path — assignment via
     `KModesModel.transform` (the argmin-Hamming array_min expression),
-    re-mode via `KModes._recompute_modes` (the melt → count →
-    row_number winner pipeline, empty clusters keeping their old mode),
+    re-mode via `KModes._recompute_modes` (the melt → weight sum →
+    row_number winner pipeline, empty clusters keeping their old mode;
+    every row enters with weight `_w` = 1, so the sums are counts),
     reassignment under the new modes — and value-hash-match, per
     cluster: the init/after sizes, how many members stayed, the
     post-step total Hamming cost, and the new mode labels themselves.
@@ -359,10 +360,11 @@ def qp02_kmodes_fit_step_trace(spark: SparkSession, sf_dir: str) -> DataFrame:
     model0 = KModesModel(cols=KMODES_COLS, modes=init_modes)
     feats = o.select("o_orderkey", *KMODES_COLS)
     a0 = model0.transform(feats, "cluster0").transform(cut_lineage)  # reused 3x below
-    # THE REAL UPDATE STEP: melt → count → row_number winners, empty
-    # clusters keep their old mode (ml/kmodes.py:_recompute_modes)
+    # THE REAL UPDATE STEP: melt → weight sum → row_number winners,
+    # empty clusters keep their old mode (ml/kmodes.py:_recompute_modes);
+    # a row of the raw table weighs 1
     new_modes = km._recompute_modes(
-        a0.select(*KMODES_COLS, F.col("cluster0").alias("cluster")), init_modes
+        a0.select(*KMODES_COLS, F.col("cluster0").alias("cluster"), F.lit(1).alias("_w")), init_modes
     )
     model1 = KModesModel(cols=KMODES_COLS, modes=new_modes)
     a1 = model1.transform(feats, "cluster").withColumn(

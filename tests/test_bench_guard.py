@@ -4,9 +4,10 @@ and the previous-round medians must parse both the raw bench JSON and
 the driver's wrapped shape."""
 
 import json
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import bench
 

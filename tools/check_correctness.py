@@ -10,6 +10,7 @@ order-insensitive canonicalized values. Run this before every commit:
 from __future__ import annotations
 
 import math
+import os
 import sys
 import time
 import traceback
@@ -18,7 +19,8 @@ from decimal import Decimal
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
 

@@ -7,18 +7,20 @@ query must appear in PLANS.md.
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from pyspark_distributed_kmodes_spark.registry import load_all
 
 
 def main():
     reg = load_all()
-    cov = open("/root/repo/COVERAGE.md").read()
-    plans = open("/root/repo/PLANS.md").read()
+    cov = open(os.path.join(ROOT, "COVERAGE.md")).read()
+    plans = open(os.path.join(ROOT, "PLANS.md")).read()
     missing_cov, missing_plan = [], []
     for name, q in sorted(reg.items()):
         stem = name.split("_")[0]  # stable number, e.g. q01 / b12 / z21

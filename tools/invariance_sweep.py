@@ -21,11 +21,13 @@ Known exception (the registry's ONLY one, round-7 audited):
 from __future__ import annotations
 
 import gc
+import os
 import sys
 import time
 import traceback
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 # query -> why partition-variance is inherent and bounded (keep this
 # list at ONE entry; a new entry needs a docstring-level error-bound

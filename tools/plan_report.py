@@ -11,7 +11,8 @@ import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from pyspark_distributed_kmodes_spark.plans.inspect import formatted_plan
 from pyspark_distributed_kmodes_spark.registry import load_all
@@ -75,7 +76,7 @@ def main():
         "their candidate-join, CC-iteration, or aggregation exchanges by design — see",
         "operator docstrings for the scale rationale.",
     ]
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(os.path.join(ROOT, "PLANS.md"), "w") as f:
         f.write("\n".join(lines) + "\n")
     print("\n".join(lines))
     spark.stop()

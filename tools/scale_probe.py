@@ -28,12 +28,14 @@ linear-workload probe for them.
 from __future__ import annotations
 
 import json
+import os
 import shutil
 import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from pyspark.sql import functions as F
 

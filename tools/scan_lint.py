@@ -41,10 +41,12 @@ Semantics and caveats (round-7 ADVICE, revised round 9):
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 # the canonical driver tables — the only data-sized inputs; temp-dir
 # round-trip scans (ORC/CSV/JSONL sinks read back) are parameter-bounded
