@@ -46,6 +46,7 @@ from pyspark_distributed_kmodes_spark.functions.deterministic import (
 )
 from pyspark_distributed_kmodes_spark.operators.analytics4 import _md5fold, _sql_md5fold
 from pyspark_distributed_kmodes_spark.registry import query
+from pyspark_distributed_kmodes_spark.session import scratch_dir
 from pyspark_distributed_kmodes_spark.sources.tables import table
 
 
@@ -3288,28 +3289,13 @@ def qm35_empirical_bayes_shrinkage(spark: SparkSession, sf_dir: str) -> DataFram
 # ---------------------------------------------------------------------------
 # m01 / m02 — REAL Structured Streaming execution under the hash gate
 
-def _rmtree_at_exit(*paths: str) -> None:
-    """Register temp dirs for end-of-process cleanup. Used for the
-    streaming TARGET dirs, which must outlive the query function (the
-    returned DataFrame reads them lazily when the caller collects);
-    source-side staging dirs are rmtree'd inline instead. Without this,
-    sweep tools that build every query repeatedly (invariance_sweep,
-    scan_lint) accumulate unbounded copies of the events table in /tmp."""
-    import atexit
-    import shutil
-
-    for p in paths:
-        atexit.register(shutil.rmtree, p, True)
-
-
 def _write_single_file(df: DataFrame, dest: str) -> None:
     """Materialize df as exactly one parquet file at `dest`."""
     import glob
     import os
     import shutil
-    import tempfile
 
-    tmp = tempfile.mkdtemp(prefix="m_chunk_")
+    tmp = scratch_dir("m_chunk")
     df.coalesce(1).write.mode("overwrite").parquet(tmp)
     part = glob.glob(os.path.join(tmp, "part-*.parquet"))[0]
     shutil.copy(part, dest)
@@ -3322,7 +3308,6 @@ def _time_chunk_files(spark: SparkSession, sf_dir: str, n_chunks: int) -> list:
     chronological order. Production streams arrive time-ordered by
     nature; this reproduces that arrival order for replay."""
     import os
-    import tempfile
 
     e = table(spark, sf_dir, "events")
     days = e.groupBy(F.date_trunc("day", "ts").alias("d")).agg(
@@ -3337,7 +3322,7 @@ def _time_chunk_files(spark: SparkSession, sf_dir: str, n_chunks: int) -> list:
             F.min("d").alias("cut")
         ).collect()[0]
         cuts.append(row["cut"])
-    holding = tempfile.mkdtemp(prefix="m_stream_chunks_")
+    holding = scratch_dir("m_stream_chunks")
     files = []
     for i in range(n_chunks):
         cond = F.lit(True)
@@ -3392,13 +3377,12 @@ def qm01_upsert_stream_convergence(spark: SparkSession, sf_dir: str) -> DataFram
     """
     import os
     import shutil
-    import tempfile
 
     from pyspark_distributed_kmodes_spark.streaming.jobs import upsert_sink_stream
 
     e = table(spark, sf_dir, "events")
-    holding = tempfile.mkdtemp(prefix="qm01_chunks_")
-    stage = tempfile.mkdtemp(prefix="qm01_stage_")
+    holding = scratch_dir("qm01_chunks")
+    stage = scratch_dir("qm01_stage")
     # arbitrary (non-time) split — the merge must not care
     for i in range(3):
         dest = os.path.join(holding, f"chunk{i}.parquet")
@@ -3408,7 +3392,7 @@ def qm01_upsert_stream_convergence(spark: SparkSession, sf_dir: str) -> DataFram
     stream = (
         spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(stage)
     )
-    target_root = tempfile.mkdtemp(prefix="qm01_target_")
+    target_root = scratch_dir("qm01_target")
     target = os.path.join(target_root, "latest")
     upsert_sink_stream(
         spark,
@@ -3421,7 +3405,6 @@ def qm01_upsert_stream_convergence(spark: SparkSession, sf_dir: str) -> DataFram
     # streaming is done: the source-side copies of events are dead weight
     shutil.rmtree(holding, ignore_errors=True)
     shutil.rmtree(stage, ignore_errors=True)
-    _rmtree_at_exit(target_root)  # must survive the lazy read below
     last = spark.read.parquet(target)
     key = _md5fold(
         F.concat(F.col("user_id").cast("string"), F.lit(":"), F.col("event_id").cast("string"))
@@ -3472,7 +3455,6 @@ def qm02_stream_restart_equivalence(spark: SparkSession, sf_dir: str) -> DataFra
     """
     import os
     import shutil
-    import tempfile
 
     from pyspark_distributed_kmodes_spark.streaming.jobs import (
         tumbling_counts_stream,
@@ -3480,9 +3462,9 @@ def qm02_stream_restart_equivalence(spark: SparkSession, sf_dir: str) -> DataFra
     )
 
     chunk_files = _time_chunk_files(spark, sf_dir, 3)
-    stage = tempfile.mkdtemp(prefix="qm02_stage_")
-    ckpt = tempfile.mkdtemp(prefix="qm02_ckpt_")
-    target_root = tempfile.mkdtemp(prefix="qm02_target_")
+    stage = scratch_dir("qm02_stage")
+    ckpt = scratch_dir("qm02_ckpt")
+    target_root = scratch_dir("qm02_target")
     target = os.path.join(target_root, "rollup")
     schema = spark.read.parquet(chunk_files[0]).schema
     for f in chunk_files:  # one NEW file per restarted run
@@ -3502,7 +3484,6 @@ def qm02_stream_restart_equivalence(spark: SparkSession, sf_dir: str) -> DataFra
     shutil.rmtree(os.path.dirname(chunk_files[0]), ignore_errors=True)
     shutil.rmtree(stage, ignore_errors=True)
     shutil.rmtree(ckpt, ignore_errors=True)
-    _rmtree_at_exit(target_root)  # must survive the lazy read below
     final = spark.read.parquet(target)
     return final.select(
         "window_start", "event_type", F.col("n_events").cast("bigint").alias("n_events")

@@ -55,7 +55,9 @@ from pyspark_distributed_kmodes_spark.functions.deterministic import (
 )
 from pyspark_distributed_kmodes_spark.functions.lineage import cut_lineage
 from pyspark_distributed_kmodes_spark.registry import query
+from pyspark_distributed_kmodes_spark.session import scratch_dir
 from pyspark_distributed_kmodes_spark.sources.tables import table
+from pyspark_distributed_kmodes_spark.streaming.jobs import drain_available_now
 
 
 # ---------------------------------------------------------------------------
@@ -530,16 +532,13 @@ def qn06_statestore_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import os
     import shutil
-    import tempfile
-
-    from pyspark_distributed_kmodes_spark.operators.analytics10 import _rmtree_at_exit
 
     # project BEFORE the staging write: the streaming aggregation only
     # touches (event_type, event_id), so staging the full events row
     # multiplies write AND stream-read bytes for nothing (guide §2.3)
     e = table(spark, sf_dir, "events").select("event_type", "event_id")
-    stage = tempfile.mkdtemp(prefix="qn06_stage_")
-    ckpt_root = tempfile.mkdtemp(prefix="qn06_ckpt_")
+    stage = scratch_dir("qn06_stage")
+    ckpt_root = scratch_dir("qn06_ckpt")
     src = os.path.join(stage, "src")
     e.write.mode("overwrite").parquet(src)
     stream = spark.readStream.schema(e.schema).parquet(src)
@@ -547,23 +546,10 @@ def qn06_statestore_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("cnt"), F.sum("event_id").alias("sm")
     )
     ckpt = os.path.join(ckpt_root, "ck")
-    q = (
-        agg.writeStream.format("noop")
-        .outputMode("complete")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    # availableNow must drain in one bounded pass; a wedged stream
-    # should fail the gate loudly, not hang the harness (300 s is
-    # ~100x the observed sf0.1 wall time)
-    if not q.awaitTermination(timeout=300):
-        q.stop()
-        raise TimeoutError("qn06: availableNow stream did not finish within 300 s")
+    drain_available_now(agg.writeStream.format("noop").outputMode("complete"), ckpt, "qn06")
     # the source copy is dead weight once the stream commits; the
     # checkpoint must survive for the lazy statestore read below
     shutil.rmtree(stage, ignore_errors=True)
-    _rmtree_at_exit(ckpt_root)
     st = spark.read.format("statestore").load(ckpt)
     # `value.count` / `value.sum` are the Count/Sum aggBufferAttributes
     # names Spark persists in the aggregation state store (verified on

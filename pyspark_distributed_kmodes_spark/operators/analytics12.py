@@ -156,7 +156,9 @@ from pyspark.sql import functions as F
 
 from pyspark_distributed_kmodes_spark.functions.lineage import cut_lineage
 from pyspark_distributed_kmodes_spark.registry import query
+from pyspark_distributed_kmodes_spark.session import scoped_conf, scratch_dir
 from pyspark_distributed_kmodes_spark.sources.tables import table
+from pyspark_distributed_kmodes_spark.streaming.jobs import drain_available_now
 
 # ---------------------------------------------------------------------------
 # r01 — SQL scripting: BEGIN...END control flow over a bounded aggregate
@@ -234,8 +236,8 @@ def qo01_sql_scripting_controlflow(spark: SparkSession, sf_dir: str) -> DataFram
         .transform(cut_lineage)
     )
     grp.createOrReplaceTempView("o01_pr_counts")
-    spark.conf.set("spark.sql.scripting.enabled", "true")
-    return spark.sql(_O01_SCRIPT)
+    with scoped_conf(spark, **{"spark.sql.scripting.enabled": "true"}):
+        return spark.sql(_O01_SCRIPT)
 
 
 # ---------------------------------------------------------------------------
@@ -700,9 +702,8 @@ def qo10_file_metadata_provenance(spark: SparkSession, sf_dir: str) -> DataFrame
     exploding into small files.
     """
     import shutil
-    import tempfile
 
-    base = tempfile.mkdtemp(prefix="o10_meta_")
+    base = scratch_dir("o10_meta")
     try:
         o = table(spark, sf_dir, "orders")
         (
@@ -877,12 +878,10 @@ def stage_event_terciles(spark: SparkSession, sf_dir: str, doubled: bool) -> str
     (sf_dir, doubled); shared by every streaming audit key that replays
     the events stream (o12, p03, p04, p05, p06)."""
     import os
-    import tempfile
 
     from pyspark.sql import Window
 
     from pyspark_distributed_kmodes_spark.operators.analytics10 import (
-        _rmtree_at_exit,
         _write_single_file,
     )
 
@@ -913,8 +912,7 @@ def stage_event_terciles(spark: SparkSession, sf_dir: str, doubled: bool) -> str
             .collect()[0]
         )
         cuts.append(row["cut"])
-    stage = tempfile.mkdtemp(prefix="evstage_")
-    _rmtree_at_exit(stage)  # register NOW so the timeout/error path can't leak it
+    stage = scratch_dir("evstage")
     for i in range(3):
         cond = F.lit(True)
         if i > 0:
@@ -961,9 +959,6 @@ def qo12_stream_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> Data
     volume. Each micro-batch shuffles once on the dedup key.
     """
     import os
-    import tempfile
-
-    from pyspark_distributed_kmodes_spark.operators.analytics10 import _rmtree_at_exit
 
     stage = stage_event_terciles(spark, sf_dir, doubled=True)
     # honest n_input: count the staged files themselves, per type
@@ -972,14 +967,13 @@ def qo12_stream_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> Data
         F.count(F.lit(1)).cast("bigint").alias("n_input")
     ).transform(cut_lineage)
 
-    target_root = tempfile.mkdtemp(prefix="o12_target_")
-    _rmtree_at_exit(target_root)  # sink read below is lazy; atexit covers error paths too
+    target_root = scratch_dir("o12_target")
     ckpt = os.path.join(target_root, "ckpt")
     sink = os.path.join(target_root, "survivors")
     stream = (
         spark.readStream.schema(staged.schema).option("maxFilesPerTrigger", 1).parquet(stage)
     )
-    q = (
+    drain_available_now(
         # project to the columns the dedup + downstream rollup touch:
         # `value`/`props` (the widest column) otherwise ride through
         # every micro-batch shuffle AND the survivor sink (guide §2.3)
@@ -988,18 +982,12 @@ def qo12_stream_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> Data
         .dropDuplicatesWithinWatermark(["event_id"])
         .writeStream.format("parquet")
         .option("path", sink)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+        .outputMode("append"),
+        ckpt,
+        "o12",
     )
-    # bounded wait (the n06 discipline): a wedged stream fails loudly
-    if not q.awaitTermination(timeout=300):
-        q.stop()
-        raise TimeoutError("o12: availableNow stream did not finish within 300 s")
     # stage is NOT rmtree'd here: stage_event_terciles' cache reuses it
-    # (atexit cleanup is already registered at mkdtemp time)
-    _rmtree_at_exit(target_root)  # sink read below is lazy
+    # (scratch_dir removes it at exit)
     survivors = spark.read.parquet(sink)
     per_type = survivors.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_dedup"),
@@ -1242,18 +1230,15 @@ def qo15_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import os
     import shutil
-    import tempfile
 
     from pyspark.sql import Window
 
     from pyspark_distributed_kmodes_spark.operators.analytics10 import (
-        _rmtree_at_exit,
         _time_chunk_files,
     )
 
     chunk_files = _time_chunk_files(spark, sf_dir, 3)
-    stage = tempfile.mkdtemp(prefix="o15_stage_")
-    _rmtree_at_exit(stage)  # register NOW so the timeout/error path can't leak it
+    stage = scratch_dir("o15_stage")
     for f in chunk_files:
         shutil.copy(f, stage)
     _order_stage_files(stage)
@@ -1310,22 +1295,14 @@ def qo15_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("p_ts") <= F.col("c_ts") + F.expr(f"INTERVAL {_O15_WINDOW_H} HOURS")),
         "leftOuter",
     )
-    target_root = tempfile.mkdtemp(prefix="o15_target_")
-    _rmtree_at_exit(target_root)  # sink read below is lazy; atexit covers error paths too
+    target_root = scratch_dir("o15_target")
     sink = os.path.join(target_root, "sink")
-    q = (
-        joined.writeStream.format("parquet")
-        .option("path", sink)
-        .option("checkpointLocation", os.path.join(target_root, "ckpt"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+    drain_available_now(
+        joined.writeStream.format("parquet").option("path", sink).outputMode("append"),
+        os.path.join(target_root, "ckpt"),
+        "o15",
     )
-    if not q.awaitTermination(timeout=300):
-        q.stop()
-        raise TimeoutError("o15: availableNow stream did not finish within 300 s")
     shutil.rmtree(stage, ignore_errors=True)
-    _rmtree_at_exit(target_root)
     emitted = spark.read.parquet(sink).where(
         F.col("c_ts") + F.expr(f"INTERVAL {_O15_WINDOW_H} HOURS")
         <= F.lit(boundary) - F.expr(f"INTERVAL {_O15_DELAY_H} HOURS") - F.expr("INTERVAL 1 HOUR")
@@ -1412,16 +1389,13 @@ def qo16_statestore_changefeed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import os
     import shutil
-    import tempfile
 
     from pyspark_distributed_kmodes_spark.operators.analytics10 import (
-        _rmtree_at_exit,
         _time_chunk_files,
     )
 
     chunk_files = _time_chunk_files(spark, sf_dir, 3)
-    stage = tempfile.mkdtemp(prefix="o16_stage_")
-    _rmtree_at_exit(stage)  # register NOW so the timeout/error path can't leak it
+    stage = scratch_dir("o16_stage")
     for f in chunk_files:
         shutil.copy(f, stage)
     _order_stage_files(stage)
@@ -1433,21 +1407,10 @@ def qo16_statestore_changefeed(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = src.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("cnt"), F.sum("event_id").alias("sm")
     )
-    ckpt_root = tempfile.mkdtemp(prefix="o16_ckpt_")
-    _rmtree_at_exit(ckpt_root)  # register NOW so the timeout/error path can't leak it
+    ckpt_root = scratch_dir("o16_ckpt")
     ckpt = os.path.join(ckpt_root, "ck")
-    q = (
-        agg.writeStream.format("noop")
-        .outputMode("complete")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(timeout=300):
-        q.stop()
-        raise TimeoutError("o16: availableNow stream did not finish within 300 s")
+    drain_available_now(agg.writeStream.format("noop").outputMode("complete"), ckpt, "o16")
     shutil.rmtree(stage, ignore_errors=True)
-    _rmtree_at_exit(ckpt_root)
     cf = (
         spark.read.format("statestore")
         .option("readChangeFeed", "true")
@@ -1708,8 +1671,8 @@ def qo19_rocksdb_statestore_parity(spark: SparkSession, sf_dir: str) -> DataFram
 
     Determinism: bigint count/sum/max are order- and partition-free;
     partition_id is dropped (invariance sweep varies
-    shuffle.partitions). The provider conf is snapshotted and
-    restored in a finally; the state READ itself resolves the
+    shuffle.partitions). The provider conf is scoped to the run
+    (scoped_conf); the state READ itself resolves the
     provider from the checkpoint's OffsetSeqMetadata (probed: the
     read succeeds even after the session conf is restored), and the
     result is materialized via cut_lineage before the restore.
@@ -1722,20 +1685,13 @@ def qo19_rocksdb_statestore_parity(spark: SparkSession, sf_dir: str) -> DataFram
     import glob
     import os
     import shutil
-    import tempfile
-
-    from pyspark_distributed_kmodes_spark.operators.analytics10 import _rmtree_at_exit
 
     e = table(spark, sf_dir, "events")
-    stage = tempfile.mkdtemp(prefix="o19_stage_")
-    ckpt_root = tempfile.mkdtemp(prefix="o19_ckpt_")
-    _rmtree_at_exit(stage)  # register NOW so the timeout/error path can't leak them
-    _rmtree_at_exit(ckpt_root)
+    stage = scratch_dir("o19_stage")
+    ckpt_root = scratch_dir("o19_ckpt")
     src = os.path.join(stage, "src")
     e.write.mode("overwrite").parquet(src)
-    prev = spark.conf.get(_O19_PROVIDER_KEY)
-    spark.conf.set(_O19_PROVIDER_KEY, _O19_ROCKSDB)
-    try:
+    with scoped_conf(spark, **{_O19_PROVIDER_KEY: _O19_ROCKSDB}):
         stream = spark.readStream.schema(e.schema).parquet(src)
         agg = stream.groupBy("event_type").agg(
             F.count(F.lit(1)).alias("cnt"),
@@ -1743,18 +1699,8 @@ def qo19_rocksdb_statestore_parity(spark: SparkSession, sf_dir: str) -> DataFram
             F.max("event_id").alias("mx"),
         )
         ckpt = os.path.join(ckpt_root, "ck")
-        q = (
-            agg.writeStream.format("noop")
-            .outputMode("complete")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(timeout=300):
-            q.stop()
-            raise TimeoutError("o19: availableNow stream did not finish within 300 s")
+        drain_available_now(agg.writeStream.format("noop").outputMode("complete"), ckpt, "o19")
         shutil.rmtree(stage, ignore_errors=True)
-        _rmtree_at_exit(ckpt_root)
         # RocksDB checkpoints upload zip snapshots (+ SSTs/); the HDFS
         # provider writes .delta files. No zip => we silently ran the
         # wrong backend and the parity claim would be vacuous.
@@ -1771,8 +1717,6 @@ def qo19_rocksdb_statestore_parity(spark: SparkSession, sf_dir: str) -> DataFram
             .orderBy("event_type")
             .transform(cut_lineage)
         )
-    finally:
-        spark.conf.set(_O19_PROVIDER_KEY, prev)
     return out
 
 
@@ -1818,12 +1762,8 @@ def qo20_rate_micro_batch_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch-timestamp key.
     """
     import os
-    import tempfile
 
-    from pyspark_distributed_kmodes_spark.operators.analytics10 import _rmtree_at_exit
-
-    root = tempfile.mkdtemp(prefix="o20_runs_")
-    _rmtree_at_exit(root)  # register NOW so the timeout/error path can't leak it
+    root = scratch_dir("o20_runs")
     out, ckpt = os.path.join(root, "out"), os.path.join(root, "ck")
     for _ in range(3):
         src = (
@@ -1834,17 +1774,7 @@ def qo20_rate_micro_batch_source(spark: SparkSession, sf_dir: str) -> DataFrame:
             .option("advanceMillisPerBatch", 1000)
             .load()
         )
-        q = (
-            src.writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(timeout=300):
-            q.stop()
-            raise TimeoutError("o20: availableNow run did not finish within 300 s")
-    _rmtree_at_exit(root)
+        drain_available_now(src.writeStream.format("parquet").option("path", out), ckpt, "o20")
     return (
         spark.read.parquet(out)
         .groupBy(F.unix_millis("timestamp").alias("ts_ms"))
@@ -1990,14 +1920,11 @@ def qo22_runtime_bloom_filter_join(spark: SparkSession, sf_dir: str) -> DataFram
 
     Scale: thresholds are lowered to exercise the optimizer rule at
     test SF (defaults 10 MB/10 GB are sized for real clusters and are
-    restored in a finally); the filter itself is a one-pass
+    restored on exit by scoped_conf); the filter itself is a one-pass
     mergeable sketch on the creation side + a scan-local probe on the
     application side — no extra shuffle.
     """
-    prev = {k: spark.conf.get(k, None) for k in _O22_CONFS}
-    for k, v in _O22_CONFS.items():
-        spark.conf.set(k, v)
-    try:
+    with scoped_conf(spark, **_O22_CONFS):
         o = table(spark, sf_dir, "orders").filter(
             F.col("o_orderpriority") == "1-URGENT"
         )
@@ -2019,12 +1946,6 @@ def qo22_runtime_bloom_filter_join(spark: SparkSession, sf_dir: str) -> DataFram
         plan = out._jdf.queryExecution().executedPlan().toString()
         if "might_contain" not in plan:
             raise RuntimeError("o22: runtime bloom filter was not injected")
-    finally:
-        for k, v in prev.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
     return out
 
 
@@ -2226,7 +2147,7 @@ def qo26_rocksdb_changelog_checkpoint(spark: SparkSession, sf_dir: str) -> DataF
     Determinism: bigint count/sum/min are order- and partition-free
     within each batch; batch composition is pinned by the
     day-tercile cuts and mtime-ordered replay; both touched confs
-    are snapshotted and restored in a finally (the reader resolves
+    are scoped to the run by scoped_conf (the reader resolves
     the provider from the checkpoint's own metadata — the r19 probe).
 
     Scale: per-batch checkpoint upload is O(changed keys), the
@@ -2236,29 +2157,20 @@ def qo26_rocksdb_changelog_checkpoint(spark: SparkSession, sf_dir: str) -> DataF
     import glob
     import os
     import shutil
-    import tempfile
 
     from pyspark_distributed_kmodes_spark.operators.analytics10 import (
-        _rmtree_at_exit,
         _time_chunk_files,
     )
 
     chunk_files = _time_chunk_files(spark, sf_dir, 3)
-    stage = tempfile.mkdtemp(prefix="o26_stage_")
-    _rmtree_at_exit(stage)  # register NOW so the timeout/error path can't leak it
+    stage = scratch_dir("o26_stage")
     for f in chunk_files:
         shutil.copy(f, stage)
     _order_stage_files(stage)
     shutil.rmtree(os.path.dirname(chunk_files[0]), ignore_errors=True)
     e = table(spark, sf_dir, "events")
 
-    prev = {
-        _O19_PROVIDER_KEY: spark.conf.get(_O19_PROVIDER_KEY),
-        _O26_CHANGELOG_KEY: spark.conf.get(_O26_CHANGELOG_KEY, None),
-    }
-    spark.conf.set(_O19_PROVIDER_KEY, _O19_ROCKSDB)
-    spark.conf.set(_O26_CHANGELOG_KEY, "true")
-    try:
+    with scoped_conf(spark, **{_O19_PROVIDER_KEY: _O19_ROCKSDB, _O26_CHANGELOG_KEY: "true"}):
         src = (
             spark.readStream.schema(e.schema)
             .option("maxFilesPerTrigger", 1)
@@ -2269,21 +2181,10 @@ def qo26_rocksdb_changelog_checkpoint(spark: SparkSession, sf_dir: str) -> DataF
             F.sum("user_id").alias("su"),
             F.min("event_id").alias("mn"),
         )
-        ckpt_root = tempfile.mkdtemp(prefix="o26_ckpt_")
-        _rmtree_at_exit(ckpt_root)  # register NOW so the timeout/error path can't leak it
+        ckpt_root = scratch_dir("o26_ckpt")
         ckpt = os.path.join(ckpt_root, "ck")
-        q = (
-            agg.writeStream.format("noop")
-            .outputMode("complete")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(timeout=300):
-            q.stop()
-            raise TimeoutError("o26: availableNow stream did not finish within 300 s")
+        drain_available_now(agg.writeStream.format("noop").outputMode("complete"), ckpt, "o26")
         shutil.rmtree(stage, ignore_errors=True)
-        _rmtree_at_exit(ckpt_root)
         changelogs = glob.glob(os.path.join(ckpt, "state", "0", "*", "*.changelog"))
         zips = glob.glob(os.path.join(ckpt, "state", "0", "*", "*.zip"))
         # a changelog CHAIN and no snapshot => the read below can only
@@ -2305,10 +2206,4 @@ def qo26_rocksdb_changelog_checkpoint(spark: SparkSession, sf_dir: str) -> DataF
             .orderBy("event_type")
             .transform(cut_lineage)
         )
-    finally:
-        spark.conf.set(_O19_PROVIDER_KEY, prev[_O19_PROVIDER_KEY])
-        if prev[_O26_CHANGELOG_KEY] is None:
-            spark.conf.unset(_O26_CHANGELOG_KEY)
-        else:
-            spark.conf.set(_O26_CHANGELOG_KEY, prev[_O26_CHANGELOG_KEY])
     return out

@@ -100,7 +100,9 @@ from pyspark_distributed_kmodes_spark.functions.deterministic import pround
 from pyspark_distributed_kmodes_spark.functions.lineage import cut_lineage
 from pyspark_distributed_kmodes_spark.operators.analytics4 import _md5fold, _sql_md5fold
 from pyspark_distributed_kmodes_spark.registry import query
+from pyspark_distributed_kmodes_spark.session import scratch_dir
 from pyspark_distributed_kmodes_spark.sources.tables import table
+from pyspark_distributed_kmodes_spark.streaming.jobs import drain_available_now
 
 # ---------------------------------------------------------------------------
 # p01 — semantic dedup under a fixed coarse quantizer (qb30's hash twin)
@@ -479,15 +481,12 @@ def qp03_stream_observe_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB stream, vs re-scanning the sink to recompute QA stats.
     """
     import os
-    import tempfile
 
-    from pyspark_distributed_kmodes_spark.operators.analytics10 import _rmtree_at_exit
     from pyspark_distributed_kmodes_spark.operators.analytics12 import stage_event_terciles
 
     stage = stage_event_terciles(spark, sf_dir, doubled=False)
     schema = spark.read.parquet(stage).schema
-    root = tempfile.mkdtemp(prefix="p03_target_")
-    _rmtree_at_exit(root)
+    root = scratch_dir("p03_target")
     stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(stage)
     obs = stream.observe(
         "audit",
@@ -495,15 +494,7 @@ def qp03_stream_observe_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.when(F.col("event_type") == "click", 1).otherwise(0)).alias("n_clicks"),
         F.sum(F.round(F.col("value"), 6).cast("decimal(25,6)")).alias("sum_value"),
     )
-    q = (
-        obs.writeStream.format("noop")
-        .option("checkpointLocation", os.path.join(root, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(timeout=300):
-        q.stop()
-        raise TimeoutError("p03: availableNow stream did not finish within 300 s")
+    q = drain_available_now(obs.writeStream.format("noop"), os.path.join(root, "ckpt"), "p03")
     batches = sorted(
         (p for p in q.recentProgress if p["numInputRows"] > 0), key=lambda p: p["batchId"]
     )
@@ -589,17 +580,14 @@ def qp04_stream_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import datetime
     import os
-    import tempfile
 
-    from pyspark_distributed_kmodes_spark.operators.analytics10 import _rmtree_at_exit
     from pyspark_distributed_kmodes_spark.operators.analytics12 import stage_event_terciles
 
     stage = stage_event_terciles(spark, sf_dir, doubled=False)
     staged = spark.read.parquet(stage)
     max_ts = staged.agg(F.max("ts")).first()[0]  # bounded scalar
     cutoff = max_ts - datetime.timedelta(hours=1, seconds=1)
-    root = tempfile.mkdtemp(prefix="p04_target_")
-    _rmtree_at_exit(root)
+    root = scratch_dir("p04_target")
     sink = os.path.join(root, "sink")
     stream = spark.readStream.schema(staged.schema).option("maxFilesPerTrigger", 1).parquet(stage)
     sess = (
@@ -617,17 +605,11 @@ def qp04_stream_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sum_ids",
         )
     )
-    q = (
-        sess.writeStream.format("parquet")
-        .option("path", sink)
-        .option("checkpointLocation", os.path.join(root, "ckpt"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+    drain_available_now(
+        sess.writeStream.format("parquet").option("path", sink).outputMode("append"),
+        os.path.join(root, "ckpt"),
+        "p04",
     )
-    if not q.awaitTermination(timeout=300):
-        q.stop()
-        raise TimeoutError("p04: availableNow stream did not finish within 300 s")
     return (
         spark.read.parquet(sink)
         .where(F.col("session_end") <= F.lit(cutoff))
@@ -687,17 +669,14 @@ def qp05_stream_chained_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import datetime
     import os
-    import tempfile
 
-    from pyspark_distributed_kmodes_spark.operators.analytics10 import _rmtree_at_exit
     from pyspark_distributed_kmodes_spark.operators.analytics12 import stage_event_terciles
 
     stage = stage_event_terciles(spark, sf_dir, doubled=False)
     staged = spark.read.parquet(stage)
     max_ts = staged.agg(F.max("ts")).first()[0]  # bounded scalar
     cutoff = max_ts - datetime.timedelta(minutes=30, seconds=1)
-    root = tempfile.mkdtemp(prefix="p05_target_")
-    _rmtree_at_exit(root)
+    root = scratch_dir("p05_target")
     sink = os.path.join(root, "sink")
     stream = spark.readStream.schema(staged.schema).option("maxFilesPerTrigger", 1).parquet(stage)
     hourly = (
@@ -716,17 +695,11 @@ def qp05_stream_chained_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("w2.start").alias("day"), "n_user_hours", "n_events", "max_user_hour"
         )
     )
-    q = (
-        daily.writeStream.format("parquet")
-        .option("path", sink)
-        .option("checkpointLocation", os.path.join(root, "ckpt"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+    drain_available_now(
+        daily.writeStream.format("parquet").option("path", sink).outputMode("append"),
+        os.path.join(root, "ckpt"),
+        "p05",
     )
-    if not q.awaitTermination(timeout=300):
-        q.stop()
-        raise TimeoutError("p05: availableNow stream did not finish within 300 s")
     return (
         spark.read.parquet(sink)
         .where(F.col("day") + F.expr("INTERVAL 1 DAY") <= F.lit(cutoff))
@@ -776,9 +749,7 @@ def qp06_stream_dedup_unbounded_state(spark: SparkSession, sf_dir: str) -> DataF
     state footprint, not a prediction of it.
     """
     import os
-    import tempfile
 
-    from pyspark_distributed_kmodes_spark.operators.analytics10 import _rmtree_at_exit
     from pyspark_distributed_kmodes_spark.operators.analytics12 import stage_event_terciles
 
     stage = stage_event_terciles(spark, sf_dir, doubled=True)
@@ -788,22 +759,17 @@ def qp06_stream_dedup_unbounded_state(spark: SparkSession, sf_dir: str) -> DataF
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_input"))
         .transform(cut_lineage)
     )
-    root = tempfile.mkdtemp(prefix="p06_target_")
-    _rmtree_at_exit(root)
+    root = scratch_dir("p06_target")
     sink = os.path.join(root, "survivors")
     stream = spark.readStream.schema(staged.schema).option("maxFilesPerTrigger", 1).parquet(stage)
-    q = (
+    q = drain_available_now(
         stream.dropDuplicates(["event_id"])
         .writeStream.format("parquet")
         .option("path", sink)
-        .option("checkpointLocation", os.path.join(root, "ckpt"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+        .outputMode("append"),
+        os.path.join(root, "ckpt"),
+        "p06",
     )
-    if not q.awaitTermination(timeout=300):
-        q.stop()
-        raise TimeoutError("p06: availableNow stream did not finish within 300 s")
     data_batches = [p for p in q.recentProgress if p["numInputRows"] > 0]
     state_rows = int(
         max(data_batches, key=lambda p: p["batchId"])["stateOperators"][0]["numRowsTotal"]
@@ -878,15 +844,12 @@ def qp07_stream_join_state_reader(spark: SparkSession, sf_dir: str) -> DataFrame
     shuffles both sides on user_id once per micro-batch.
     """
     import os
-    import tempfile
 
-    from pyspark_distributed_kmodes_spark.operators.analytics10 import _rmtree_at_exit
     from pyspark_distributed_kmodes_spark.operators.analytics12 import stage_event_terciles
 
     stage = stage_event_terciles(spark, sf_dir, doubled=False)
     schema = spark.read.parquet(stage).schema
-    root = tempfile.mkdtemp(prefix="p07_target_")
-    _rmtree_at_exit(root)
+    root = scratch_dir("p07_target")
     ckpt = os.path.join(root, "ckpt")
     src = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(stage)
     clicks = (
@@ -914,15 +877,7 @@ def qp07_stream_join_state_reader(spark: SparkSession, sf_dir: str) -> DataFrame
         & (F.col("p_ts") <= F.col("c_ts") + F.expr("INTERVAL 2 HOURS")),
         "inner",
     )
-    q = (
-        joined.writeStream.format("noop")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(timeout=300):
-        q.stop()
-        raise TimeoutError("p07: availableNow stream did not finish within 300 s")
+    drain_available_now(joined.writeStream.format("noop"), ckpt, "p07")
     left = (
         spark.read.format("statestore")
         .option("joinSide", "left")
@@ -1438,9 +1393,7 @@ def qp13_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     post-hoc audit rollup.
     """
     import os
-    import tempfile
 
-    from pyspark_distributed_kmodes_spark.operators.analytics10 import _rmtree_at_exit
     from pyspark_distributed_kmodes_spark.operators.analytics12 import stage_event_terciles
 
     stage = stage_event_terciles(spark, sf_dir, doubled=False)
@@ -1448,24 +1401,17 @@ def qp13_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     dim = table(spark, sf_dir, "customer").select(
         F.col("c_custkey"), F.col("c_mktsegment")
     )
-    root = tempfile.mkdtemp(prefix="p13_target_")
-    _rmtree_at_exit(root)
+    root = scratch_dir("p13_target")
     sink = os.path.join(root, "sink")
     stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(stage)
     enriched = stream.join(
         F.broadcast(dim), stream["user_id"] == dim["c_custkey"], "inner"
     ).select("event_id", "user_id", "event_type", "c_mktsegment")
-    q = (
-        enriched.writeStream.format("parquet")
-        .option("path", sink)
-        .option("checkpointLocation", os.path.join(root, "ckpt"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+    drain_available_now(
+        enriched.writeStream.format("parquet").option("path", sink).outputMode("append"),
+        os.path.join(root, "ckpt"),
+        "p13",
     )
-    if not q.awaitTermination(timeout=300):
-        q.stop()
-        raise TimeoutError("p13: availableNow stream did not finish within 300 s")
     return (
         spark.read.parquet(sink)
         .groupBy("c_mktsegment", "event_type")
@@ -1543,12 +1489,10 @@ def qp14_stateful_timer_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     pandas, no row-at-a-time Python.
     """
     import os
-    import tempfile
 
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    from pyspark_distributed_kmodes_spark.operators.analytics10 import _rmtree_at_exit
     from pyspark_distributed_kmodes_spark.operators.analytics12 import stage_event_terciles
 
     gap_us = _P14_GAP_MIN * 60 * 1_000_000
@@ -1615,8 +1559,7 @@ def qp14_stateful_timer_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ]
             )
 
-    root = tempfile.mkdtemp(prefix="p14_target_")
-    _rmtree_at_exit(root)
+    root = scratch_dir("p14_target")
     sink = os.path.join(root, "sink")
     stream = spark.readStream.schema(staged.schema).option("maxFilesPerTrigger", 1).parquet(stage)
     sess = (
@@ -1626,17 +1569,11 @@ def qp14_stateful_timer_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
             sessionize, out_schema, state_schema, "append", GroupStateTimeout.EventTimeTimeout
         )
     )
-    q = (
-        sess.writeStream.format("parquet")
-        .option("path", sink)
-        .option("checkpointLocation", os.path.join(root, "ckpt"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+    drain_available_now(
+        sess.writeStream.format("parquet").option("path", sink).outputMode("append"),
+        os.path.join(root, "ckpt"),
+        "p14",
     )
-    if not q.awaitTermination(timeout=300):
-        q.stop()
-        raise TimeoutError("p14: availableNow stream did not finish within 300 s")
     return (
         spark.read.parquet(sink)
         .select(
@@ -1713,9 +1650,7 @@ def qp15_stream_union_two_sources(spark: SparkSession, sf_dir: str) -> DataFrame
     """
     import datetime
     import os
-    import tempfile
 
-    from pyspark_distributed_kmodes_spark.operators.analytics10 import _rmtree_at_exit
     from pyspark_distributed_kmodes_spark.operators.analytics12 import (
         _order_stage_files,
         stage_event_terciles,
@@ -1725,8 +1660,7 @@ def qp15_stream_union_two_sources(spark: SparkSession, sf_dir: str) -> DataFrame
     staged = spark.read.parquet(stage_a)
     max_a = staged.agg(F.max("ts")).first()[0]  # bounded scalar
     cutoff = max_a - datetime.timedelta(hours=1, seconds=1)  # min-of-sources wm - 1 s
-    root = tempfile.mkdtemp(prefix="p15_target_")
-    _rmtree_at_exit(root)
+    root = scratch_dir("p15_target")
     # source b: the +15 min / +10M replica, staged once per call root
     stage_b = os.path.join(root, "stage_b")
     os.makedirs(stage_b)
@@ -1778,17 +1712,11 @@ def qp15_stream_union_two_sources(spark: SparkSession, sf_dir: str) -> DataFrame
         .select("src", F.col("w.start").alias("day"), "n", "sum_ids")
     )
     sink = os.path.join(root, "sink")
-    q = (
-        agg.writeStream.format("parquet")
-        .option("path", sink)
-        .option("checkpointLocation", os.path.join(root, "ckpt"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+    drain_available_now(
+        agg.writeStream.format("parquet").option("path", sink).outputMode("append"),
+        os.path.join(root, "ckpt"),
+        "p15",
     )
-    if not q.awaitTermination(timeout=300):
-        q.stop()
-        raise TimeoutError("p15: availableNow stream did not finish within 300 s")
     return (
         spark.read.parquet(sink)
         .where(F.col("day") + F.expr("INTERVAL 1 DAY") <= F.lit(cutoff))
@@ -1845,15 +1773,11 @@ def qp16_sorted_run_writer_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     apply the same maxRecordsPerFile contract per task.
     """
     import os
-    import tempfile
 
     from pyspark.sql import Window as W
 
-    from pyspark_distributed_kmodes_spark.operators.analytics10 import _rmtree_at_exit
-
     e = table(spark, sf_dir, "events")
-    root = tempfile.mkdtemp(prefix="p16_target_")
-    _rmtree_at_exit(root)
+    root = scratch_dir("p16_target")
     out = os.path.join(root, "sorted")
     (
         e.select("ts", "event_id")

@@ -195,7 +195,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pyspark_distributed_kmodes_spark.registry import query
+from pyspark_distributed_kmodes_spark.session import scoped_conf, scratch_dir
 from pyspark_distributed_kmodes_spark.sources.tables import table
+from pyspark_distributed_kmodes_spark.streaming.jobs import drain_available_now
 
 # ---------------------------------------------------------------------------
 # p18 — LSH bucket assignment audit under deterministic md5-parity planes
@@ -375,14 +377,11 @@ def p19_datasource_abort_protocol(spark: SparkSession, sf_dir: str) -> DataFrame
     this is engine surface (pyspark.sql.datasource two-phase commit).
     """
     import os
-    import tempfile
 
-    from pyspark_distributed_kmodes_spark.operators.analytics10 import _rmtree_at_exit
     from pyspark_distributed_kmodes_spark.sources import jsonl
 
     jsonl.register(spark)
-    root = tempfile.mkdtemp(prefix="p19_target_")
-    _rmtree_at_exit(root)
+    root = scratch_dir("p19_target")
     target = os.path.join(root, "orders_sink")
     o = table(spark, sf_dir, "orders").select("o_orderkey", "o_orderstatus")
 
@@ -505,27 +504,25 @@ def p20_state_reader_partition_pruning(spark: SparkSession, sf_dir: str) -> Data
     """
     import glob as _g
     import os
-    import tempfile
     import time
 
-    from pyspark_distributed_kmodes_spark.operators.analytics10 import _rmtree_at_exit
     from pyspark_distributed_kmodes_spark.operators.analytics12 import stage_event_terciles
 
     stage = stage_event_terciles(spark, sf_dir, doubled=False)
     staged = spark.read.parquet(stage)
     expected_rows = staged.count()  # bounded scalar: completion target
-    root = tempfile.mkdtemp(prefix="p20_target_")
-    _rmtree_at_exit(root)
+    root = scratch_dir("p20_target")
     ckpt = os.path.join(root, "ckpt")
 
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    old_min = spark.conf.get("spark.sql.streaming.stateStore.minDeltasForSnapshot", "10")
-    old_int = spark.conf.get("spark.sql.streaming.stateStore.maintenanceInterval", "60s")
-    spark.conf.set("spark.sql.shuffle.partitions", str(_P20_PARTS))
-    spark.conf.set("spark.sql.streaming.stateStore.minDeltasForSnapshot", "1")
-    spark.conf.set("spark.sql.streaming.stateStore.maintenanceInterval", "500ms")
-    try:
-        def _start(trigger_kwargs):
+    with scoped_conf(
+        spark,
+        **{
+            "spark.sql.shuffle.partitions": str(_P20_PARTS),
+            "spark.sql.streaming.stateStore.minDeltasForSnapshot": "1",
+            "spark.sql.streaming.stateStore.maintenanceInterval": "500ms",
+        },
+    ):
+        def _writer():
             stream = (
                 spark.readStream.schema(staged.schema)
                 .option("maxFilesPerTrigger", 1)
@@ -535,19 +532,10 @@ def p20_state_reader_partition_pruning(spark: SparkSession, sf_dir: str) -> Data
                 F.count(F.lit(1)).cast("bigint").alias("n_events"),
                 F.sum("event_id").cast("bigint").alias("sum_ids"),
             )
-            return (
-                agg.writeStream.format("noop")
-                .option("checkpointLocation", ckpt)
-                .outputMode("update")
-                .trigger(**trigger_kwargs)
-                .start()
-            )
+            return agg.writeStream.format("noop").outputMode("update")
 
         # Run 1: consume every staged file; terminates deterministically.
-        q = _start({"availableNow": True})
-        if not q.awaitTermination(timeout=300):
-            q.stop()
-            raise TimeoutError("p20: availableNow stream did not finish within 300 s")
+        q = drain_available_now(_writer(), ckpt, "p20")
         done = sum(p["numInputRows"] for p in (q.recentProgress or []))
         if done != expected_rows:
             raise AssertionError(f"p20: consumed {done} of {expected_rows} staged rows")
@@ -555,7 +543,12 @@ def p20_state_reader_partition_pruning(spark: SparkSession, sf_dir: str) -> Data
         # Run 2: idle restart of the same checkpoint — providers stay
         # loaded so the forced maintenance writes every partition's
         # snapshot; poll for all of them, then stop.
-        q = _start({"processingTime": "500 milliseconds"})
+        q = (
+            _writer()
+            .option("checkpointLocation", ckpt)
+            .trigger(processingTime="500 milliseconds")
+            .start()
+        )
         deadline = time.time() + 180
         def _missing():
             return [
@@ -624,10 +617,6 @@ def p20_state_reader_partition_pruning(spark: SparkSession, sf_dir: str) -> Data
             .withColumn("pruned_vs_full_diff", F.lit(diff).cast("int"))
             .orderBy("user_id")
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-        spark.conf.set("spark.sql.streaming.stateStore.minDeltasForSnapshot", old_min)
-        spark.conf.set("spark.sql.streaming.stateStore.maintenanceInterval", old_int)
 
 
 p20_state_reader_partition_pruning.__doc__ = p20_state_reader_partition_pruning.__doc__.replace(
@@ -705,15 +694,12 @@ def p21_foreachbatch_multi_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     here at the orchestration layer).
     """
     import os
-    import tempfile
 
-    from pyspark_distributed_kmodes_spark.operators.analytics10 import _rmtree_at_exit
     from pyspark_distributed_kmodes_spark.operators.analytics12 import stage_event_terciles
 
     stage = stage_event_terciles(spark, sf_dir, doubled=False)
     staged = spark.read.parquet(stage)
-    root = tempfile.mkdtemp(prefix="p21_target_")
-    _rmtree_at_exit(root)
+    root = scratch_dir("p21_target")
     sink_a = os.path.join(root, "sink_a")
     sink_b = os.path.join(root, "sink_b")
 
@@ -747,15 +733,11 @@ def p21_foreachbatch_multi_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         .parquet(stage)
         .select("ts", "event_type", "value")
     )
-    q = (
-        stream.writeStream.foreachBatch(fan_out)
-        .option("checkpointLocation", os.path.join(root, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
+    drain_available_now(
+        stream.writeStream.foreachBatch(fan_out),
+        os.path.join(root, "ckpt"),
+        "p21",
     )
-    if not q.awaitTermination(timeout=300):
-        q.stop()
-        raise TimeoutError("p21: availableNow stream did not finish within 300 s")
     a = spark.read.parquet(sink_a)
     b = spark.read.parquet(sink_b)
     return (
@@ -809,51 +791,48 @@ def p22_bucket_pruning_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     law certified here (bucket routing at write == bucket selection
     at read) is what makes that safe.
     """
-    import tempfile
     import uuid
 
-    from pyspark_distributed_kmodes_spark.operators.analytics10 import _rmtree_at_exit
     from pyspark_distributed_kmodes_spark.sources.tables import write_bucketed
 
     o = table(spark, sf_dir, "orders").select("o_orderkey", "o_orderstatus", "o_totalprice")
     keys = [r.o_orderkey for r in o.orderBy("o_orderkey").limit(3).collect()]  # bounded
-    base = tempfile.mkdtemp(prefix="p22_bucketed_")
-    _rmtree_at_exit(base)
+    base = scratch_dir("p22_bucketed")
     run = uuid.uuid4().hex[:12]
     tbl = f"p22_orders_bucketed_{run}"
     write_bucketed(o, tbl, "o_orderkey", _P22_BUCKETS, path=f"{base}/orders")
     # the planner auto-DISABLES bucketed scans when no operator needs
     # the bucket distribution (autoBucketedScan) — but bucket PRUNING
     # only happens on a bucketed scan, so pin it on for the probe
-    old_auto = spark.conf.get("spark.sql.sources.bucketing.autoBucketedScan.enabled", "true")
-    spark.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
     try:
-        probe = spark.table(tbl).where(F.col("o_orderkey").isin(keys))
-        plan = probe._jdf.queryExecution().executedPlan().toString()
-        import re as _re
+        with scoped_conf(
+            spark, **{"spark.sql.sources.bucketing.autoBucketedScan.enabled": "false"}
+        ):
+            probe = spark.table(tbl).where(F.col("o_orderkey").isin(keys))
+            plan = probe._jdf.queryExecution().executedPlan().toString()
+            import re as _re
 
-        m = _re.search(r"SelectedBucketsCount: (\d+) out of (\d+)", plan)
-        if m is None:
-            raise AssertionError("p22: scan did not report bucket selection (pruning off?)")
-        selected, total = int(m.group(1)), int(m.group(2))
-        if total != _P22_BUCKETS:
-            raise AssertionError(f"p22: expected {_P22_BUCKETS} buckets, scan shows {total}")
-        return (
-            probe.select(
-                "o_orderkey",
-                "o_orderstatus",
-                F.col("o_totalprice").cast("double").alias("total_price"),
+            m = _re.search(r"SelectedBucketsCount: (\d+) out of (\d+)", plan)
+            if m is None:
+                raise AssertionError("p22: scan did not report bucket selection (pruning off?)")
+            selected, total = int(m.group(1)), int(m.group(2))
+            if total != _P22_BUCKETS:
+                raise AssertionError(f"p22: expected {_P22_BUCKETS} buckets, scan shows {total}")
+            return (
+                probe.select(
+                    "o_orderkey",
+                    "o_orderstatus",
+                    F.col("o_totalprice").cast("double").alias("total_price"),
+                )
+                .withColumn("pruning_effective", F.lit(int(selected < total)).cast("int"))
+                .withColumn(
+                    "selected_within_key_count", F.lit(int(selected <= len(keys))).cast("int")
+                )
+                .orderBy("o_orderkey")
+                # materialize before the catalog entry is dropped below
+                .transform(lambda df: spark.createDataFrame(df.collect(), df.schema))
             )
-            .withColumn("pruning_effective", F.lit(int(selected < total)).cast("int"))
-            .withColumn(
-                "selected_within_key_count", F.lit(int(selected <= len(keys))).cast("int")
-            )
-            .orderBy("o_orderkey")
-            # materialize before the catalog entry is dropped below
-            .transform(lambda df: spark.createDataFrame(df.collect(), df.schema))
-        )
     finally:
-        spark.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled", old_auto)
         spark.sql(f"DROP TABLE IF EXISTS {tbl}")
 
 
@@ -1338,25 +1317,18 @@ def p29_join_state_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     snapshotting the full store; replay is two groupBys on the key.
     """
     import os
-    import tempfile
 
-    from pyspark_distributed_kmodes_spark.operators.analytics10 import _rmtree_at_exit
     from pyspark_distributed_kmodes_spark.operators.analytics12 import stage_event_terciles
 
     stage = stage_event_terciles(spark, sf_dir, doubled=False)
     staged = spark.read.parquet(stage)
-    root = tempfile.mkdtemp(prefix="p29_target_")
-    _rmtree_at_exit(root)
+    root = scratch_dir("p29_target")
     ckpt = os.path.join(root, "ckpt")
     # pin state partitioning (the p20 rule): a vanilla 200-partition
     # session would freeze 200 state partitions into the checkpoint and
     # pay 200-task statestore scans for a 32-core box
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "32")
-    try:
+    with scoped_conf(spark, **{"spark.sql.shuffle.partitions": "32"}):
         return _p29_run(spark, stage, staged, ckpt)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
 
 
 def _p29_run(spark: SparkSession, stage: str, staged: DataFrame, ckpt: str) -> DataFrame:
@@ -1386,15 +1358,7 @@ def _p29_run(spark: SparkSession, stage: str, staged: DataFrame, ckpt: str) -> D
         & (F.col("p_ts") <= F.col("c_ts") + F.expr("INTERVAL 2 HOURS")),
         "inner",
     )
-    q = (
-        joined.writeStream.format("noop")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(timeout=300):
-        q.stop()
-        raise TimeoutError("p29: availableNow stream did not finish within 300 s")
+    drain_available_now(joined.writeStream.format("noop"), ckpt, "p29")
 
     feed = (
         spark.read.format("statestore")
@@ -1559,16 +1523,13 @@ def p31_datasource_stream_partitions(spark: SparkSession, sf_dir: str) -> DataFr
     micro-batches (or files_per_batch-sized groups).
     """
     import os
-    import tempfile
     import time
 
-    from pyspark_distributed_kmodes_spark.operators.analytics10 import _rmtree_at_exit
     from pyspark_distributed_kmodes_spark.sources import jsonl
 
     jsonl.register_shards(spark)
     d = table(spark, sf_dir, "documents").select("doc_id", "source", "n_chars")
-    root = tempfile.mkdtemp(prefix="p31_target_")
-    _rmtree_at_exit(root)
+    root = scratch_dir("p31_target")
     stage = os.path.join(root, "stage")
     d.repartition(3, "doc_id").write.json(stage)
     per_file = (
@@ -1661,13 +1622,9 @@ def p32_partition_pruning_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     both halves — plan-time pruning AND the runtime file set.
     """
     import os
-    import tempfile
-
-    from pyspark_distributed_kmodes_spark.operators.analytics10 import _rmtree_at_exit
 
     e = table(spark, sf_dir, "events").select("event_id", "event_type", "ts")
-    root = tempfile.mkdtemp(prefix="p32_target_")
-    _rmtree_at_exit(root)
+    root = scratch_dir("p32_target")
     out = os.path.join(root, "events_by_type")
     e.write.mode("overwrite").partitionBy("event_type").parquet(out)
     scan = spark.read.parquet(out).where(F.col("event_type") == "purchase")
@@ -1737,17 +1694,14 @@ def p33_file_stream_clean_source_archive(spark: SparkSession, sf_dir: str) -> Da
     """
     import os
     import shutil
-    import tempfile
 
-    from pyspark_distributed_kmodes_spark.operators.analytics10 import _rmtree_at_exit
     from pyspark_distributed_kmodes_spark.operators.analytics12 import (
         _order_stage_files,
         stage_event_terciles,
     )
 
     shared = stage_event_terciles(spark, sf_dir, doubled=False)
-    root = tempfile.mkdtemp(prefix="p33_target_")
-    _rmtree_at_exit(root)
+    root = scratch_dir("p33_target")
     src = os.path.join(root, "landing")
     arch = os.path.join(root, "archive")
     os.makedirs(src)
@@ -1765,16 +1719,11 @@ def p33_file_stream_clean_source_archive(spark: SparkSession, sf_dir: str) -> Da
         .parquet(src + "/*")
     )
     sink = os.path.join(root, "sink")
-    q = (
-        stream.select("event_id", "event_type").writeStream.format("parquet")
-        .option("path", sink)
-        .option("checkpointLocation", os.path.join(root, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
+    drain_available_now(
+        stream.select("event_id", "event_type").writeStream.format("parquet").option("path", sink),
+        os.path.join(root, "ckpt"),
+        "p33",
     )
-    if not q.awaitTermination(timeout=300):
-        q.stop()
-        raise TimeoutError("p33: availableNow stream did not finish within 300 s")
     import glob as _g
 
     stage_names = {f for f in os.listdir(shared) if f.endswith(".parquet")}
@@ -1935,9 +1884,7 @@ def p35_stream_byte_cap_admission(spark: SparkSession, sf_dir: str) -> DataFrame
     this key certifies the byte budget actually governs admission.
     """
     import os
-    import tempfile
 
-    from pyspark_distributed_kmodes_spark.operators.analytics10 import _rmtree_at_exit
     from pyspark_distributed_kmodes_spark.operators.analytics12 import stage_event_terciles
 
     stage = stage_event_terciles(spark, sf_dir, doubled=False)
@@ -1967,18 +1914,12 @@ def p35_stream_byte_cap_admission(spark: SparkSession, sf_dir: str) -> DataFrame
         ).collect()[0]  # bounded: one row per micro-batch
         batches.append((bid, int(row["n"]), int(row["s"])))
 
-    root = tempfile.mkdtemp(prefix="p35_ckpt_")
-    _rmtree_at_exit(root)
-    q = (
-        stream.select("event_id")
-        .writeStream.foreachBatch(_fb)
-        .option("checkpointLocation", os.path.join(root, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
+    root = scratch_dir("p35_ckpt")
+    drain_available_now(
+        stream.select("event_id").writeStream.foreachBatch(_fb),
+        os.path.join(root, "ckpt"),
+        "p35",
     )
-    if not q.awaitTermination(timeout=300):
-        q.stop()
-        raise TimeoutError("p35: availableNow stream did not finish within 300 s")
     two = int(len(batches) == 2)
     first_two = int(len(batches) >= 1 and batches[0][1] == first_two_rows)
     out = spark.createDataFrame(

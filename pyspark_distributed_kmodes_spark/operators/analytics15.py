@@ -101,7 +101,9 @@ from pyspark.sql import functions as F
 
 from pyspark_distributed_kmodes_spark.functions.deterministic import pround, sql_pround
 from pyspark_distributed_kmodes_spark.registry import query
+from pyspark_distributed_kmodes_spark.session import scoped_conf, scratch_dir
 from pyspark_distributed_kmodes_spark.sources.tables import table
+from pyspark_distributed_kmodes_spark.streaming.jobs import drain_available_now
 
 # ---------------------------------------------------------------------------
 # z01 — ps.melt + ps.DataFrame.stack (wide-to-long, both reshapes)
@@ -444,18 +446,14 @@ def z05_stream_sink_replay_protocol(spark: SparkSession, sf_dir: str) -> DataFra
     """
     import glob as g
     import os
-    import tempfile
-    import time
 
-    from pyspark_distributed_kmodes_spark.operators.analytics10 import _rmtree_at_exit
     from pyspark_distributed_kmodes_spark.operators.analytics12 import stage_event_terciles
     from pyspark_distributed_kmodes_spark.sources import jsonl
 
     jsonl.register(spark)
     stage = stage_event_terciles(spark, sf_dir, doubled=False)
     staged = spark.read.parquet(stage)
-    root = tempfile.mkdtemp(prefix="z05_target_")
-    _rmtree_at_exit(root)
+    root = scratch_dir("z05_target")
     sink = os.path.join(root, "sink")
     ckpt = os.path.join(root, "ckpt")
 
@@ -466,20 +464,7 @@ def z05_stream_sink_replay_protocol(spark: SparkSession, sf_dir: str) -> DataFra
             .parquet(stage)
             .select("event_id", "event_type")
         )
-        q = (
-            src.writeStream.format("jsonl_docs")
-            .option("path", sink)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(timeout=300):
-            q.stop()
-            raise TimeoutError("z05: availableNow stream did not finish within 300 s")
-        q.stop()
-        deadline = time.time() + 60
-        while q.isActive and time.time() < deadline:
-            time.sleep(0.1)
+        drain_available_now(src.writeStream.format("jsonl_docs").option("path", sink), ckpt, "z05")
 
     def _ledger_lines() -> int:
         path = os.path.join(sink, "_commits.jsonl")
@@ -593,7 +578,7 @@ def z06_rocksdb_changelog_join_state(spark: SparkSession, sf_dir: str) -> DataFr
 
     Determinism: batch composition pinned by day-tercile cuts and
     mtime-ordered replay; both confs and the shuffle-partition pin
-    are snapshotted and restored in a finally; the result is
+    are scoped to the run by scoped_conf; the result is
     materialized (lineage cut) before the confs are restored.
 
     Scale: join state is the dominant streaming-state cost at 100 TB
@@ -604,10 +589,8 @@ def z06_rocksdb_changelog_join_state(spark: SparkSession, sf_dir: str) -> DataFr
     """
     import glob as g
     import os
-    import tempfile
 
     from pyspark_distributed_kmodes_spark.functions.lineage import cut_lineage
-    from pyspark_distributed_kmodes_spark.operators.analytics10 import _rmtree_at_exit
     from pyspark_distributed_kmodes_spark.operators.analytics12 import (
         _O19_PROVIDER_KEY,
         _O19_ROCKSDB,
@@ -617,19 +600,17 @@ def z06_rocksdb_changelog_join_state(spark: SparkSession, sf_dir: str) -> DataFr
 
     stage = stage_event_terciles(spark, sf_dir, doubled=False)
     staged = spark.read.parquet(stage)
-    root = tempfile.mkdtemp(prefix="z06_target_")
-    _rmtree_at_exit(root)
+    root = scratch_dir("z06_target")
     ckpt = os.path.join(root, "ckpt")
 
-    prev = {
-        _O19_PROVIDER_KEY: spark.conf.get(_O19_PROVIDER_KEY),
-        _O26_CHANGELOG_KEY: spark.conf.get(_O26_CHANGELOG_KEY, None),
-        "spark.sql.shuffle.partitions": spark.conf.get("spark.sql.shuffle.partitions"),
-    }
-    spark.conf.set(_O19_PROVIDER_KEY, _O19_ROCKSDB)
-    spark.conf.set(_O26_CHANGELOG_KEY, "true")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with scoped_conf(
+        spark,
+        **{
+            _O19_PROVIDER_KEY: _O19_ROCKSDB,
+            _O26_CHANGELOG_KEY: "true",
+            "spark.sql.shuffle.partitions": "8",
+        },
+    ):
         src = (
             spark.readStream.schema(staged.schema)
             .option("maxFilesPerTrigger", 1)
@@ -660,15 +641,7 @@ def z06_rocksdb_changelog_join_state(spark: SparkSession, sf_dir: str) -> DataFr
             & (F.col("p_ts") <= F.col("c_ts") + F.expr("INTERVAL 2 HOURS")),
             "inner",
         )
-        q = (
-            joined.writeStream.format("noop")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(timeout=300):
-            q.stop()
-            raise TimeoutError("z06: availableNow stream did not finish within 300 s")
+        drain_available_now(joined.writeStream.format("noop"), ckpt, "z06")
 
         changelogs = g.glob(os.path.join(ckpt, "state", "0", "*", "*", "*.changelog"))
         zips = g.glob(os.path.join(ckpt, "state", "0", "*", "*", "*.zip"))
@@ -706,13 +679,6 @@ def z06_rocksdb_changelog_join_state(spark: SparkSession, sf_dir: str) -> DataFr
             .orderBy("side", "event_id")
             .transform(cut_lineage)
         )
-    finally:
-        spark.conf.set(_O19_PROVIDER_KEY, prev[_O19_PROVIDER_KEY])
-        if prev[_O26_CHANGELOG_KEY] is None:
-            spark.conf.unset(_O26_CHANGELOG_KEY)
-        else:
-            spark.conf.set(_O26_CHANGELOG_KEY, prev[_O26_CHANGELOG_KEY])
-        spark.conf.set("spark.sql.shuffle.partitions", prev["spark.sql.shuffle.partitions"])
     return out
 
 
@@ -761,18 +727,15 @@ def z07_stream_restart_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     import glob as g
     import os
     import shutil
-    import tempfile
 
     from pyspark_distributed_kmodes_spark.operators.analytics10 import (
-        _rmtree_at_exit,
         _time_chunk_files,
     )
     from pyspark_distributed_kmodes_spark.operators.analytics12 import _order_stage_files
 
     chunk_files = _time_chunk_files(spark, sf_dir, 4)
     holding = os.path.dirname(chunk_files[0])
-    root = tempfile.mkdtemp(prefix="z07_target_")
-    _rmtree_at_exit(root)
+    root = scratch_dir("z07_target")
     stage = os.path.join(root, "stage")
     os.makedirs(stage)
     sink = os.path.join(root, "sink")
@@ -780,28 +743,13 @@ def z07_stream_restart_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     e_schema = spark.read.parquet(chunk_files[0]).schema
 
     def _run() -> None:
-        import time
-
         src = (
             spark.readStream.schema(e_schema)
             .option("maxFilesPerTrigger", 1)
             .parquet(stage)
             .select("event_id", "event_type", "user_id", "ts")
         )
-        q = (
-            src.writeStream.format("parquet")
-            .option("path", sink)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(timeout=300):
-            q.stop()
-            raise TimeoutError("z07: availableNow stream did not finish within 300 s")
-        q.stop()
-        deadline = time.time() + 60
-        while q.isActive and time.time() < deadline:
-            time.sleep(0.1)
+        drain_available_now(src.writeStream.format("parquet").option("path", sink), ckpt, "z07")
 
     def _n_commits() -> int:
         return len(
@@ -898,25 +846,15 @@ def z08_stream_output_mode_matrix(spark: SparkSession, sf_dir: str) -> DataFrame
     100 TB pipeline pick the cheapest sink-compatible mode.
     """
     import os
-    import tempfile
     import uuid
 
-    from pyspark_distributed_kmodes_spark.operators.analytics10 import _rmtree_at_exit
     from pyspark_distributed_kmodes_spark.operators.analytics12 import stage_event_terciles
 
     stage = stage_event_terciles(spark, sf_dir, doubled=False)
     staged = spark.read.parquet(stage)
-    root = tempfile.mkdtemp(prefix="z08_target_")
-    _rmtree_at_exit(root)
+    root = scratch_dir("z08_target")
     tag = uuid.uuid4().hex[:8]
-    # pin state partitioning (the p20/p29 rule): a vanilla 200-partition
-    # session would pay 3 x 200 state-store tasks per micro-batch here
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "32")
-
     def _run(mode: str) -> DataFrame:
-        import time
-
         src = (
             spark.readStream.schema(staged.schema)
             .option("maxFilesPerTrigger", 1)
@@ -928,21 +866,11 @@ def z08_stream_output_mode_matrix(spark: SparkSession, sf_dir: str) -> DataFrame
             F.sum("event_id").cast("bigint").alias("sum_ids"),
         )
         name = f"z08_{mode}_{tag}"
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(mode)
-            .option("checkpointLocation", os.path.join(root, f"ckpt_{mode}"))
-            .trigger(availableNow=True)
-            .start()
+        drain_available_now(
+            agg.writeStream.format("memory").queryName(name).outputMode(mode),
+            os.path.join(root, f"ckpt_{mode}"),
+            f"z08 {mode}",
         )
-        if not q.awaitTermination(timeout=300):
-            q.stop()
-            raise TimeoutError(f"z08: {mode} stream did not finish within 300 s")
-        q.stop()
-        deadline = time.time() + 60
-        while q.isActive and time.time() < deadline:
-            time.sleep(0.1)
         return spark.table(name).select(
             F.col("w.start").alias("day_start"),
             F.col("w.end").alias("day_end"),
@@ -951,7 +879,9 @@ def z08_stream_output_mode_matrix(spark: SparkSession, sf_dir: str) -> DataFrame
             "sum_ids",
         )
 
-    try:
+    # pin state partitioning (the p20/p29 rule): a vanilla 200-partition
+    # session would pay 3 x 200 state-store tasks per micro-batch here
+    with scoped_conf(spark, **{"spark.sql.shuffle.partitions": "32"}):
         complete = _run("complete").cache()
         append = _run("append").cache()
         update = _run("update")
@@ -990,6 +920,4 @@ def z08_stream_output_mode_matrix(spark: SparkSession, sf_dir: str) -> DataFrame
         )
         complete.unpersist()
         append.unpersist()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
     return out

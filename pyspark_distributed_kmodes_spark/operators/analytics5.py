@@ -26,6 +26,7 @@ from pyspark_distributed_kmodes_spark.functions.deterministic import (
 from pyspark_distributed_kmodes_spark.operators.curation2 import _dterm, _sql_dterm
 from pyspark_distributed_kmodes_spark.operators.analytics4 import _md5fold as _md5fold_local
 from pyspark_distributed_kmodes_spark.registry import query
+from pyspark_distributed_kmodes_spark.session import scratch_dir
 from pyspark_distributed_kmodes_spark.sources.tables import spread, table
 
 # ---------------------------------------------------------------------------
@@ -888,9 +889,8 @@ def qh10_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     finally.
     """
     import shutil
-    import tempfile
 
-    base = tempfile.mkdtemp(prefix="qh10_orc_")
+    base = scratch_dir("qh10_orc")
     try:
         d = table(spark, sf_dir, "documents")
         d.write.mode("overwrite").orc(base + "/documents")
@@ -935,9 +935,8 @@ def qh11_partition_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     materialization, cleanup in finally.
     """
     import shutil
-    import tempfile
 
-    base = tempfile.mkdtemp(prefix="qh11_part_")
+    base = scratch_dir("qh11_part")
     try:
         e = table(spark, sf_dir, "events")
         e.write.mode("overwrite").partitionBy("event_type").parquet(base + "/events")

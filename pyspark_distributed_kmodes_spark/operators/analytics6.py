@@ -34,6 +34,7 @@ from pyspark_distributed_kmodes_spark.functions.deterministic import (
 from pyspark_distributed_kmodes_spark.operators.analytics4 import _md5fold, _sql_md5fold
 from pyspark_distributed_kmodes_spark.operators.curation2 import _dterm, _sql_dterm
 from pyspark_distributed_kmodes_spark.registry import query
+from pyspark_distributed_kmodes_spark.session import scratch_dir
 from pyspark_distributed_kmodes_spark.sources.tables import spread, table
 
 
@@ -272,9 +273,8 @@ def qi02_snapshot_diff_timetravel(spark: SparkSession, sf_dir: str) -> DataFrame
     materialization, cleanup in finally (h10/qc01 discipline).
     """
     import shutil
-    import tempfile
 
-    base = tempfile.mkdtemp(prefix="qi02_snap_")
+    base = scratch_dir("qi02_snap")
     try:
         d = table(spark, sf_dir, "documents").select("doc_id", "text", "source")
         d.write.mode("overwrite").parquet(base + "/v1")
@@ -2237,9 +2237,8 @@ def qi27_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     discipline).
     """
     import shutil
-    import tempfile
 
-    base = tempfile.mkdtemp(prefix="qi27_evo_")
+    base = scratch_dir("qi27_evo")
     try:
         d = table(spark, sf_dir, "documents")
         d.filter(F.col("doc_id") % 2 == 0).select("doc_id", "source", "n_chars").write.mode(

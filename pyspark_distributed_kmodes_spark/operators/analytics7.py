@@ -35,6 +35,7 @@ from pyspark_distributed_kmodes_spark.functions.deterministic import (
 from pyspark_distributed_kmodes_spark.operators.analytics4 import _md5fold, _sql_md5fold
 from pyspark_distributed_kmodes_spark.operators.curation2 import _dterm, _sql_dterm
 from pyspark_distributed_kmodes_spark.registry import query
+from pyspark_distributed_kmodes_spark.session import scratch_dir
 from pyspark_distributed_kmodes_spark.sources.tables import spread, table
 
 
@@ -683,9 +684,8 @@ def qj08_binaryfile_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import os
     import shutil
-    import tempfile
 
-    base = tempfile.mkdtemp(prefix="qj08_bin_")
+    base = scratch_dir("qj08_bin")
     try:
         d = table(spark, sf_dir, "documents")
         rows = (
@@ -737,9 +737,8 @@ def qj09_text_source_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     choose. Idempotent temp dir + eager materialization.
     """
     import shutil
-    import tempfile
 
-    base = tempfile.mkdtemp(prefix="qj09_text_")
+    base = scratch_dir("qj09_text")
     try:
         d = table(spark, sf_dir, "documents")
         d.select("text").write.mode("overwrite").text(base + "/lines")

@@ -35,6 +35,7 @@ from pyspark_distributed_kmodes_spark.functions.deterministic import (
 )
 from pyspark_distributed_kmodes_spark.operators.analytics4 import _md5fold, _sql_md5fold
 from pyspark_distributed_kmodes_spark.registry import query
+from pyspark_distributed_kmodes_spark.session import scoped_conf, scratch_dir
 from pyspark_distributed_kmodes_spark.sources.tables import spread, table
 
 _DAY_US = 86_400_000_000
@@ -1297,9 +1298,8 @@ def qj34_write_audit_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import os
     import shutil
-    import tempfile
 
-    base = tempfile.mkdtemp(prefix="qj34_wap_")
+    base = scratch_dir("qj34_wap")
     staging, published = os.path.join(base, "staging"), os.path.join(base, "published")
     try:
         src = table(spark, sf_dir, "documents").select("doc_id", "lang", "n_chars").filter(
@@ -1783,15 +1783,12 @@ def qj40_dynamic_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFr
 
     Scale: partition-selective rewrite is THE idiom for backfilling one
     day/tenant out of a 100 TB table — write cost scales with the
-    partition, not the table. Cleanup in finally; session conf is
-    restored after the write.
+    partition, not the table. Cleanup in finally; the overwrite-mode
+    conf is scoped to the backfill write.
     """
     import shutil
-    import tempfile
 
-    base = tempfile.mkdtemp(prefix="qj40_dpo_")
-    conf_key = "spark.sql.sources.partitionOverwriteMode"
-    old = spark.conf.get(conf_key, "STATIC")
+    base = scratch_dir("qj40_dpo")
     try:
         o = table(spark, sf_dir, "orders").select("o_orderkey", "o_orderpriority", "o_totalprice")
         o.write.mode("overwrite").partitionBy("o_orderpriority").parquet(base)
@@ -1800,9 +1797,8 @@ def qj40_dynamic_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFr
             .filter(F.col("o_orderpriority") == "1-URGENT")
             .withColumn("o_totalprice", F.col("o_totalprice") * 2)
         )
-        spark.conf.set(conf_key, "dynamic")
-        backfill.write.mode("overwrite").partitionBy("o_orderpriority").parquet(base)
-        spark.conf.set(conf_key, old)
+        with scoped_conf(spark, **{"spark.sql.sources.partitionOverwriteMode": "dynamic"}):
+            backfill.write.mode("overwrite").partitionBy("o_orderpriority").parquet(base)
         after = spark.read.parquet(base)
         urgent = F.col("o_orderpriority") == "1-URGENT"
         return after.agg(
@@ -1816,7 +1812,6 @@ def qj40_dynamic_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFr
             ),
         ).transform(cut_lineage)
     finally:
-        spark.conf.set(conf_key, old)
         shutil.rmtree(base, ignore_errors=True)
 
 

@@ -32,6 +32,7 @@ from pyspark_distributed_kmodes_spark.functions.deterministic import (
 from pyspark_distributed_kmodes_spark.operators.analytics4 import _md5fold, _sql_md5fold
 from pyspark_distributed_kmodes_spark.operators.analytics8 import _SQL_DAY_IDX, _day_idx
 from pyspark_distributed_kmodes_spark.registry import query
+from pyspark_distributed_kmodes_spark.session import scratch_dir
 from pyspark_distributed_kmodes_spark.sources.tables import table
 
 
@@ -1868,9 +1869,8 @@ def qk23_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     Cleanup in finally; eager materialization before the temp dir dies.
     """
     import shutil
-    import tempfile
 
-    base = tempfile.mkdtemp(prefix="qk23_xml_")
+    base = scratch_dir("qk23_xml")
     try:
         d = table(spark, sf_dir, "documents").select("doc_id", "lang", "n_chars")
         d.write.format("xml").option("rootTag", "docs").option("rowTag", "doc").mode(
@@ -1924,9 +1924,8 @@ def qk24_csv_malformed_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-row and map-side combined. Cleanup in finally.
     """
     import shutil
-    import tempfile
 
-    base = tempfile.mkdtemp(prefix="qk24_csv_")
+    base = scratch_dir("qk24_csv")
     try:
         d = table(spark, sf_dir, "documents").select("doc_id", "lang", "n_chars")
         csv_line = F.concat_ws(
@@ -1992,9 +1991,8 @@ def qk25_parquet_codec_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     double-digit terabytes of storage and scan I/O saved.
     """
     import shutil
-    import tempfile
 
-    base = tempfile.mkdtemp(prefix="qk25_zstd_")
+    base = scratch_dir("qk25_zstd")
     try:
         o = table(spark, sf_dir, "orders").select("o_orderkey", "o_orderpriority", "o_totalprice")
         o.write.mode("overwrite").option("compression", "zstd").parquet(base + "/z")

@@ -23,7 +23,6 @@ from __future__ import annotations
 from pyspark_distributed_kmodes_spark.functions.lineage import cut_lineage
 
 import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -31,6 +30,7 @@ from pyspark.sql import types as T
 
 from pyspark_distributed_kmodes_spark.functions.deterministic import dsum, pround, sql_dsum, sql_pround
 from pyspark_distributed_kmodes_spark.registry import query
+from pyspark_distributed_kmodes_spark.session import scratch_dir
 from pyspark_distributed_kmodes_spark.sources.tables import read_csv, table
 
 
@@ -80,7 +80,7 @@ def qc01_csv_ingest_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     lose pushdown and column pruning — the engine's read_csv exists for
     day-one ingestion; steady state converts to parquet (write_parquet).
     """
-    base = tempfile.mkdtemp(prefix="qc01_csv_")
+    base = scratch_dir("qc01_csv")
     try:
         c = table(spark, sf_dir, "customer")
         c.write.option("header", True).mode("overwrite").csv(base + "/customer")
@@ -136,7 +136,7 @@ def qc02_jsonl_datasource_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one input partition per shard file — a 10k-shard corpus
     reads with 10k-way parallelism; the driver plans file NAMES only.
     """
-    base = tempfile.mkdtemp(prefix="qc02_jsonl_")
+    base = scratch_dir("qc02_jsonl")
     try:
         from pyspark_distributed_kmodes_spark.sources import jsonl
 
@@ -204,7 +204,7 @@ def qe06_jsonl_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     now for a sink the engine owns. Idempotent: unique temp dir, k-row
     result pinned, cleanup in finally (b34's pattern).
     """
-    base = tempfile.mkdtemp(prefix="e06_jsonl_sink_")
+    base = scratch_dir("e06_jsonl_sink")
     try:
         from pyspark_distributed_kmodes_spark.sources import jsonl
 

@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 
 from pyspark_distributed_kmodes_spark.functions.deterministic import dsum, pround, sql_dsum, sql_pround
 from pyspark_distributed_kmodes_spark.registry import query
+from pyspark_distributed_kmodes_spark.session import scratch_dir
 from pyspark_distributed_kmodes_spark.sources.tables import table
 
 
@@ -310,7 +311,6 @@ def qb34_bucketed_colocated_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     dropped before returning — no state leaks across runs.
     """
     import shutil
-    import tempfile
     import uuid
 
     from pyspark_distributed_kmodes_spark.sources.tables import write_bucketed
@@ -331,7 +331,7 @@ def qb34_bucketed_colocated_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # explicit temp paths: the hosting session's warehouse dir defaults
     # to the process cwd, which this query must not write into
-    base = tempfile.mkdtemp(prefix="qb34_bucketed_")
+    base = scratch_dir("qb34_bucketed")
     run = uuid.uuid4().hex[:12]
     li_tbl, o_tbl = f"qb34_li_bucketed_{run}", f"qb34_o_bucketed_{run}"
     try:

@@ -1,14 +1,23 @@
-"""SparkSession construction and per-session runtime configuration.
+"""SparkSession construction, per-session runtime configuration, and the
+two primitives that keep one query's state out of the next.
 
 The driver may hand us an already-built session, so everything that can
 be set at runtime (timezone, AQE, shuffle partitions) is applied
 idempotently via `configure(spark)`; builder-time settings live in
 `get_spark()` for our own tests/bench.
+
+Queries that need their own temp dirs or session confs take them from
+here: `scratch_dir(tag)` is the engine's only mkdtemp (one prefix, removed
+at exit, stale leftovers swept by `sweep_stale_tmp()`), and
+`scoped_conf(spark, **confs)` sets confs for a with-block and restores
+or unsets each one on every exit path.
 """
 
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
+from typing import Iterator
 
 from pyspark.sql import SparkSession
 
@@ -30,32 +39,50 @@ RUNTIME_CONFS = {
 }
 
 
-# Temp-dir prefixes the engine's staging/checkpoint queries create
-# under tempfile.gettempdir() (qm01/qm02/n06, the file-format sinks,
-# the streaming stage dirs). Each query cleans up after itself (rmtree
-# post-stream or atexit), but a killed process leaks its dirs — the
-# round-9 audit found 273 stale ones. sweep_stale_tmp() removes only
-# dirs matching these prefixes AND older than a day, so concurrent
-# live sessions (whose dirs are minutes old) are never touched.
-_TMP_PREFIXES = (
-    "events_stream_", "upsert_ckpt_", "m_chunk_", "m_stream_chunks_",
-    "qm01_", "qm02_", "qn06_", "qc01_csv_", "qc02_jsonl_",
-    "e06_jsonl_sink_", "qh10_orc_", "qh11_part_", "qi02_snap_",
-    "qi27_evo_", "qj08_bin_", "qj09_text_", "qj34_wap_", "qj40_dpo_",
-    "qk23_xml_", "qk24_csv_", "qk25_zstd_", "qb34_bucketed_",
-    # the former r-suite (now o-keys) streaming/staging dirs — each is
-    # also atexit-registered at mkdtemp time, so the sweeper only has
-    # to catch dirs orphaned by a killed process
-    "o10_meta_", "o12_target_", "o15_stage_",
-    "o15_target_", "o16_stage_", "o16_ckpt_", "o19_stage_",
-    "o19_ckpt_", "o20_runs_", "o26_stage_", "o26_ckpt_",
-    # round-11 p-suite + the shared memoized events staging ("o12_stage_"
-    # retired with it — o12 now stages through evstage_)
-    "evstage_", "p03_target_", "p04_target_", "p05_target_",
-    "p06_target_", "p07_target_", "p13_target_", "p14_target_",
-    "p04_planted_", "p07_pin_", "p14_pin_", "p03_listener_",
-    "p06_contrast_",
-)
+# Every temp dir the engine creates (staging copies, checkpoints, stream
+# targets) comes from scratch_dir(), so all of them share this prefix.
+# Each is removed inline or at exit, but a killed process leaks its dirs
+# (the round-9 audit found 273 stale ones); sweep_stale_tmp() removes
+# only dirs with this prefix AND older than a day, so concurrent live
+# sessions (whose dirs are minutes old) are never touched.
+_TMP_PREFIX = "sgraft_"
+
+
+def scratch_dir(tag: str) -> str:
+    """A fresh temp dir named sgraft_<tag>_*, removed at process exit.
+
+    Removal waits for exit because streaming targets are read lazily:
+    the DataFrame a key returns reads its dir when the caller collects.
+    Callers whose dir is dead weight once the key returns rmtree it
+    inline as well."""
+    import atexit
+    import shutil
+    import tempfile
+
+    path = tempfile.mkdtemp(prefix=f"{_TMP_PREFIX}{tag}_")
+    atexit.register(shutil.rmtree, path, True)
+    return path
+
+
+@contextmanager
+def scoped_conf(spark: SparkSession, **confs: str) -> Iterator[None]:
+    """Set session confs for the body of a with-block, then put each back
+    as it was on every exit path: its prior value, or unset if it had
+    none. Keys are Spark conf names, so callers pass them as
+    **{"spark.sql....": value}."""
+    prior = {k: spark.conf.get(k, None) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in prior.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
 _SWEEP_DONE = False
 
 
@@ -75,7 +102,7 @@ def sweep_stale_tmp(max_age_sec: float = 86400.0) -> int:
     except OSError:
         return 0
     for name in entries:
-        if not name.startswith(_TMP_PREFIXES):
+        if not name.startswith(_TMP_PREFIX):
             continue
         path = os.path.join(root, name)
         try:

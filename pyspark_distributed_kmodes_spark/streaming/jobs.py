@@ -5,12 +5,45 @@ on the batch forms in operators/events.py; these jobs prove the SAME
 logical plans run incrementally under readStream with watermarks.
 tests/test_streaming.py executes them with trigger(availableNow=True)
 against the events parquet and checks agreement with the batch results.
+
+Every availableNow run in the engine goes through `drain_available_now`,
+the one place that starts such a query and bounds the wait for it.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
+
+from pyspark_distributed_kmodes_spark.session import scratch_dir
+
+# Upper bound on one availableNow drain: a wedged stream must fail its
+# query loudly rather than hang the caller (300 s is ~100x qn06's
+# observed sf0.1 wall time).
+DRAIN_TIMEOUT_S = 300
+
+
+def drain_available_now(
+    writer: DataStreamWriter, ckpt: str | None, label: str
+) -> StreamingQuery:
+    """Start `writer` with trigger(availableNow=True) on checkpoint `ckpt`
+    and wait for it to drain everything currently available.
+
+    `ckpt=None` leaves the checkpoint to Spark (a temp location, allowed
+    for the memory sink only). On timeout the query is stopped and
+    TimeoutError names `label`. Returns the terminated query, whose
+    recentProgress the caller may read.
+    """
+    if ckpt is not None:
+        writer = writer.option("checkpointLocation", ckpt)
+    q = writer.trigger(availableNow=True).start()
+    if not q.awaitTermination(timeout=DRAIN_TIMEOUT_S):
+        q.stop()
+        raise TimeoutError(
+            f"{label}: availableNow stream did not finish within {DRAIN_TIMEOUT_S} s"
+        )
+    return q
 
 
 def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -23,12 +56,9 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     converted to a microsecond timestamp in-stream.
     """
     import shutil
-    import tempfile
-
-    from pyspark.sql import functions as F
 
     raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    stage = tempfile.mkdtemp(prefix="events_stream_")
+    stage = scratch_dir("events_stream")
     shutil.copy(f"{sf_dir}/events.parquet", stage)
     stream = spark.readStream.schema(raw_schema).parquet(stage)
     from pyspark.sql import types as T
@@ -89,14 +119,11 @@ def run_available_now(stream_df: DataFrame, query_name: str, output_mode: str | 
         plan = stream_df._jdf.queryExecution().analyzed().toString()
         aggregated = "Aggregate" in plan
         output_mode = "complete" if aggregated else "append"
-    q = (
-        stream_df.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode(output_mode)
-        .trigger(availableNow=True)
-        .start()
+    drain_available_now(
+        stream_df.writeStream.format("memory").queryName(query_name).outputMode(output_mode),
+        None,
+        query_name,
     )
-    q.awaitTermination()
     return query_name
 
 
@@ -254,8 +281,6 @@ def upsert_sink_stream(
     table would permanently lack it. For non-aggregate streams update
     and append deliver identical rows.
     """
-    import tempfile
-
     from pyspark.sql import Window
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -299,13 +324,10 @@ def upsert_sink_stream(
         fs.rename(tmp_new, target)
         fs.delete(tmp_old, True)
 
-    (
-        stream_df.writeStream.foreachBatch(apply_batch)
-        .outputMode(output_mode)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint_dir or tempfile.mkdtemp(prefix="upsert_ckpt_"))
-        .start()
-        .awaitTermination()
+    drain_available_now(
+        stream_df.writeStream.foreachBatch(apply_batch).outputMode(output_mode),
+        checkpoint_dir or scratch_dir("upsert_ckpt"),
+        "upsert_sink_stream",
     )
 
 

@@ -1,5 +1,12 @@
 """Oracle parity at sf0.001 for every SQL-expressible query (SURVEY.md §5
-layer 2) — the same comparison the driver runs at sf0.01."""
+layer 2) — the same comparison the driver runs at sf0.01.
+
+Every key is built once per run: the parity and rows-only tests record
+each built DataFrame's schema in SCHEMAS, and the scalar-column guard
+reads it from there (it builds the key itself only when run alone or
+under -k). Both collecting tests also gate per-key state leaks: the
+session conf must be unchanged after the collect and no streaming query
+may still be active."""
 
 import pytest
 
@@ -8,12 +15,31 @@ from tools.check_correctness import rows_key
 
 QS = entrymod.queries()
 ORACLES = entrymod.oracle_sql()
+SCHEMAS = {}
+
+
+def _collect_without_leaks(name, spark, sf_dir):
+    """Build and collect one key; assert it leaves the session's explicitly
+    set confs and its active streams as it found them."""
+    conf_before = dict(spark.conf.getAll)
+    df = QS[name](spark, sf_dir)
+    SCHEMAS[name] = df.schema
+    rows = df.collect()
+    conf_after = dict(spark.conf.getAll)
+    changed = {
+        k: (conf_before.get(k), conf_after.get(k))
+        for k in conf_before.keys() | conf_after.keys()
+        if conf_before.get(k) != conf_after.get(k)
+    }
+    assert not changed, f"{name}: session conf leaked (before, after): {changed}"
+    active = [q.name or q.id for q in spark.streams.active]
+    assert not active, f"{name}: streaming queries left running: {active}"
+    return df.columns, rows
 
 
 @pytest.mark.parametrize("name", sorted(ORACLES))
 def test_oracle_parity(name, spark, duck, sf_dir):
-    df = QS[name](spark, sf_dir)
-    scols, srows = df.columns, df.collect()
+    scols, srows = _collect_without_leaks(name, spark, sf_dir)
     rel = duck.execute(ORACLES[name])
     dcols = [d[0] for d in rel.description]
     drows = rel.fetchall()
@@ -24,7 +50,7 @@ def test_oracle_parity(name, spark, duck, sf_dir):
 
 @pytest.mark.parametrize("name", sorted(set(QS) - set(ORACLES)))
 def test_rows_only_queries_run(name, spark, sf_dir):
-    rows = QS[name](spark, sf_dir).collect()
+    _, rows = _collect_without_leaks(name, spark, sf_dir)
     assert rows is not None
 
 
@@ -36,10 +62,11 @@ def test_queries_return_hashable_scalar_columns(name, spark, sf_dir):
     ORACLE-GATED query — the r02 version of this guard only covered
     rows-only queries, which is exactly how b14 slipped through).
     EVERY registered query must emit only scalar (atomic) columns;
-    sequences are carried as position-ordered hashes (b14 pattern)."""
+    sequences are carried as position-ordered hashes (b14 pattern).
+    The schema comes from the collecting tests above when they ran."""
     from pyspark.sql import types as T
 
-    schema = QS[name](spark, sf_dir).schema
+    schema = SCHEMAS.get(name) or QS[name](spark, sf_dir).schema
     bad = [f.name for f in schema.fields if isinstance(f.dataType, (T.ArrayType, T.MapType, T.StructType))]
     assert not bad, f"{name}: non-scalar columns {bad} would crash the driver canonicalizer"
 

@@ -15,6 +15,7 @@ import math
 import pytest
 
 from pyspark_distributed_kmodes_spark.registry import load_all
+from pyspark_distributed_kmodes_spark.session import scratch_dir
 
 
 @pytest.fixture(scope="module")
@@ -255,7 +256,6 @@ def test_p03_listener_agrees_with_progress(spark, sf_dir):
     progress history reports (same source, but the listener path is
     the push-based production hookup — prove they agree)."""
     import os
-    import tempfile
 
     from pyspark.sql import functions as F
     from pyspark.sql.streaming import StreamingQueryListener
@@ -285,7 +285,7 @@ def test_p03_listener_agrees_with_progress(spark, sf_dir):
     try:
         stage = stage_event_terciles(spark, "/root/testdata/sf0.001", doubled=False)
         schema = spark.read.parquet(stage).schema
-        root = tempfile.mkdtemp(prefix="p03_listener_")
+        root = scratch_dir("p03_listener")
         stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(stage)
         obs = stream.observe("audit", F.count(F.lit(1)).alias("n_rows"))
         q = (
@@ -320,7 +320,6 @@ def test_p04_session_merges_across_micro_batches_planted(spark):
     not to produce (no user straddles a cut midnight within the gap,
     checked below), so it is planted here."""
     import os
-    import tempfile
     from datetime import datetime, timedelta
 
     from pyspark.sql import functions as F
@@ -330,7 +329,7 @@ def test_p04_session_merges_across_micro_batches_planted(spark):
     # within 30 min of chunk A's last event -> must merge; the late row
     # advances the watermark so the merged session actually emits
     chunk_b = [(1, t0 + timedelta(minutes=25)), (9, t0 + timedelta(hours=6))]
-    root = tempfile.mkdtemp(prefix="p04_planted_")
+    root = scratch_dir("p04_planted")
     stage = os.path.join(root, "stage")
     os.makedirs(stage)
     for i, rows in enumerate([chunk_a, chunk_b]):
@@ -430,7 +429,6 @@ def test_p06_state_is_unbounded_vs_o12_bounded(spark, sf_dir, reg):
     watermark-bounded variant's final state is strictly smaller on the
     same staged stream."""
     import os
-    import tempfile
 
     from pyspark.sql import functions as F
 
@@ -442,7 +440,7 @@ def test_p06_state_is_unbounded_vs_o12_bounded(spark, sf_dir, reg):
     # run the o12-style bounded variant on the same stage and read ITS state
     stage = stage_event_terciles(spark, sf_dir, doubled=True)
     schema = spark.read.parquet(stage).schema
-    root = tempfile.mkdtemp(prefix="p06_contrast_")
+    root = scratch_dir("p06_contrast")
     stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(stage)
     q = (
         stream.withWatermark("ts", "1 hour")
@@ -499,11 +497,10 @@ def test_p07_eviction_boundary_is_inclusive(spark):
     row with ts == watermark are both RETAINED (>= retention), while
     strictly older rows are gone."""
     import os
-    import tempfile
 
     from pyspark.sql import functions as F
 
-    root = tempfile.mkdtemp(prefix="p07_pin_")
+    root = scratch_dir("p07_pin")
     stage = _p07_join_fixture(spark, root)
     schema = spark.read.parquet(os.path.join(stage, "c0.parquet")).schema
     src = (
@@ -841,7 +838,6 @@ def test_p14_timer_fires_for_tail_session(spark):
     the terminal batch — if the timer half were broken, the session
     would die silently in state."""
     import os
-    import tempfile
     from datetime import datetime, timedelta
 
     import pandas as pd
@@ -849,7 +845,7 @@ def test_p14_timer_fires_for_tail_session(spark):
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     t0 = datetime(2024, 3, 1, 12, 0, 0)
-    root = tempfile.mkdtemp(prefix="p14_pin_")
+    root = scratch_dir("p14_pin")
     stage = os.path.join(root, "stage")
     os.makedirs(stage)
     chunk_a = [(1, 100, t0), (2, 100, t0 + timedelta(minutes=5))]

@@ -579,16 +579,14 @@ def test_p35_minimal_cap_degenerates_to_one_file_per_batch(spark, sf_dir):
     """The at-least-one-file rule: a 1-byte cap must still make
     progress — three files, three batches."""
     import os
-    import tempfile
 
-    from pyspark_distributed_kmodes_spark.operators.analytics10 import _rmtree_at_exit
     from pyspark_distributed_kmodes_spark.operators.analytics12 import stage_event_terciles
+    from pyspark_distributed_kmodes_spark.session import scratch_dir
 
     stage = stage_event_terciles(spark, sf_dir, doubled=False)
     schema = spark.read.parquet(stage).schema
     seen = []
-    root = tempfile.mkdtemp(prefix="p35_min_")
-    _rmtree_at_exit(root)
+    root = scratch_dir("p35_min")
     q = (
         spark.readStream.schema(schema)
         .option("maxBytesPerTrigger", "1")

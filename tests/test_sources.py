@@ -365,22 +365,27 @@ def test_jsonl_stream_writer_replay_and_partial_commit(tmp_path):
 
 def test_sweep_stale_tmp_removes_only_old_engine_dirs(tmp_path, monkeypatch):
     """The startup sweep must remove engine-prefixed dirs older than the
-    age bound and leave fresh ones and foreign dirs alone."""
+    age bound (including one made by scratch_dir) and leave fresh ones
+    and foreign dirs alone."""
     import os
+    import pathlib
     import tempfile
     import time
 
     from pyspark_distributed_kmodes_spark import session as sess
 
     monkeypatch.setattr(tempfile, "gettempdir", lambda: str(tmp_path))
-    stale = tmp_path / "qm01_stage_stale"
-    fresh = tmp_path / "qm01_stage_fresh"
+    stale = tmp_path / "sgraft_qm01_stage_stale"
+    fresh = tmp_path / "sgraft_qm01_stage_fresh"
     foreign = tmp_path / "someone_elses_dir_old"
     for d in (stale, fresh, foreign):
         d.mkdir()
+    made = pathlib.Path(sess.scratch_dir("qm01_stage"))
+    assert made.parent == tmp_path
     old = time.time() - 2 * 86400
-    os.utime(stale, (old, old))
-    os.utime(foreign, (old, old))
+    for d in (stale, foreign, made):
+        os.utime(d, (old, old))
     removed = sess.sweep_stale_tmp()
-    assert removed == 1
-    assert not stale.exists() and fresh.exists() and foreign.exists()
+    assert removed == 2
+    assert not stale.exists() and not made.exists()
+    assert fresh.exists() and foreign.exists()
