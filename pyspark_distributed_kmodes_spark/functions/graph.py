@@ -7,9 +7,7 @@ component). Two execution strategies behind one function:
    than the corpus (a 100 TB corpus with 1% near-dup rate yields
    ~10⁸ edges ≈ a few GB; the default limit stays well under that).
    One bounded collect + union-by-min with path compression + one
-   parallelize back replaces O(log diameter) shuffle rounds, each of
-   which costs 3 shuffles + a convergence-count action + an eager
-   checkpoint in fixed job overhead.
+   parallelize back replaces O(log diameter) distributed rounds.
 
 2. **Distributed pointer-doubling label propagation** (larger lists):
    iterative min-label propagation PLUS pointer doubling:
@@ -21,18 +19,23 @@ component). Two execution strategies behind one function:
    repeated until fixpoint. Plain propagation needs O(diameter) rounds;
    the label(label(v)) term halves remaining path length each round,
    giving O(log diameter) — the same convergence class as the
-   large-star/small-star map-reduce CC algorithm (Kiveris et al.), with
-   simpler per-round plans (one edge→label join + one label→label join
-   + one min-agg: 3 shuffles).
+   large-star/small-star map-reduce CC algorithm (Kiveris et al.).
 
-Scale notes (distributed path): every round ends in
-`localCheckpoint(eager=True)` — without it each iteration's plan embeds
-the previous plan several times and the Catalyst tree grows
-exponentially (analysis stack overflow long before data size matters).
-Checkpointing also bounds recovery lineage on a real cluster. Both
-paths are deterministic and produce IDENTICAL labels: component = min
-vertex id in the set (union-by-min keeps the set root at the minimum;
-propagation converges to the same minimum).
+Scale notes (distributed path): round 0 takes each vertex's label
+straight from the symmetrized edge aggregation. Each later round is
+ONE join — the symmetrized edges plus the label map itself as extra
+edges v → label(v), joined to the current labels — and ONE min
+aggregate per vertex, which yields both the neighbor term and the
+doubled term. Every round's labels are cut with `cut_lineage_lazy`,
+so the plan never embeds the previous round's plan (no exponential
+Catalyst growth) and recovery lineage stays bounded. The fixpoint test
+is the label SUM: labels only decrease, so the round whose exact
+DECIMAL sum equals the previous one's has converged; that one tiny
+aggregate is also the action that fills the round's lazy cut.
+
+Both paths are deterministic and produce IDENTICAL labels: component =
+min vertex id in the set (union-by-min keeps the set root at the
+minimum; propagation converges to the same minimum).
 """
 
 from __future__ import annotations

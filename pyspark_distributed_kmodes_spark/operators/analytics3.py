@@ -145,16 +145,21 @@ def qf18_ngram_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     # it re-runs per n-gram position (r13 HOF-capture fix)
     words = F.col("_w")
     n_words = F.size(words)
-    starts = F.sequence(F.lit(1), F.greatest(n_words - (_DECON_N - 1), F.lit(0)))
+    starts = F.sequence(F.lit(1), n_words - (_DECON_N - 1))
     # per-doc distinct n-grams computed LOCALLY (array_distinct): the
     # old cross-row .distinct() paid a full (doc, source, gram)
-    # exchange for a dedup the row already contains
+    # exchange for a dedup the row already contains. Docs shorter than
+    # the width have no n-grams (unguarded, the sequence would run DOWN
+    # through 0 and crash F.slice).
     grams = d.withColumn("_w", F.split("text", " ")).select(
         "doc_id",
         "source",
         F.explode(
-            F.array_distinct(
-                F.transform(starts, lambda s: F.array_join(F.slice(words, s, _DECON_N), " "))
+            F.when(
+                n_words >= _DECON_N,
+                F.array_distinct(
+                    F.transform(starts, lambda s: F.array_join(F.slice(words, s, _DECON_N), " "))
+                ),
             )
         ).alias("g"),
     )

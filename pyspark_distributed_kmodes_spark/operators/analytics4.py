@@ -26,6 +26,7 @@ from pyspark_distributed_kmodes_spark.functions.deterministic import (
     sql_dsum,
     sql_pround,
 )
+from pyspark_distributed_kmodes_spark.functions.shingles import shingle_arrays, shingles
 from pyspark_distributed_kmodes_spark.operators.curation2 import _dterm, _sql_dterm
 from pyspark_distributed_kmodes_spark.registry import query
 from pyspark_distributed_kmodes_spark.sources.tables import spread, table
@@ -564,33 +565,6 @@ def _sql_mh_mins(src: str = "shingles") -> str:
     return f"SELECT doc_id, {mins} FROM {src} GROUP BY doc_id"
 
 
-def _doc_shingle_arrays(d: DataFrame) -> DataFrame:
-    """(doc_id, sh: array<string>) — distinct word-trigram shingles per
-    doc, computed LOCALLY (array_distinct; empty array for <3-word
-    docs). Signature folds consume the array without any shuffle."""
-    # split materialized once per row (r13 HOF-capture fix)
-    words = F.col("_w")
-    n = F.size(words)
-    grams = F.when(
-        n >= 3,
-        F.array_distinct(
-            F.transform(F.sequence(F.lit(1), n - 2), lambda i: F.array_join(F.slice(words, i, 3), " "))
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    return (
-        spread(d, "doc_id")
-        .withColumn("_w", F.split("text", " "))
-        .select("doc_id", grams.alias("sh"))
-    )
-
-
-def _doc_shingles(d: DataFrame) -> DataFrame:
-    """Distinct word-trigram shingles, the _SHINGLE_CTE mirror — the
-    per-doc dedup happens locally in _doc_shingle_arrays (no cross-row
-    distinct exchange)."""
-    return _doc_shingle_arrays(d).select("doc_id", F.explode("sh").alias("shingle"))
-
-
 @query(
     "qg04_lsh_recall_audit",
     oracle=f"""
@@ -643,14 +617,12 @@ def qg04_lsh_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark_distributed_kmodes_spark.operators.text import ngram_jaccard_pairs
 
-    from pyspark_distributed_kmodes_spark.operators.text import doc_trigram_shingles
-
     d = table(spark, sf_dir, "documents")
     # ONE materialized shingle index serves BOTH passes (round-13): the
     # exact-Jaccard truth join and the signature aggregation previously
     # each built their own explode+distinct pipeline; sharing the
     # checkpoint halves the shingle work and shortens the critical path
-    sh = doc_trigram_shingles(d).transform(cut_lineage)
+    sh = shingles(d).transform(cut_lineage)
     truth = ngram_jaccard_pairs(d, threshold=0.5, shingles=sh).select("doc_a", "doc_b")
     mins = [
         F.min(_md5fold(F.concat_ws("#", F.col("shingle"), F.lit(str(i))))).alias(f"h{i}")
@@ -758,7 +730,7 @@ def qg05_minhash_stability(spark: SparkSession, sf_dir: str) -> DataFrame:
     <= {_MH_K + 1}-row histogram. md5-portable like g04, integers out.
     """
     d = table(spark, sf_dir, "documents")
-    sig_raw = _mh_mins(_doc_shingle_arrays(d))
+    sig_raw = _mh_mins(shingle_arrays(d))
     # normalized word array materialized once per row — captured in the
     # transform lambda it re-runs split+stopword-filter per shingle
     # position (r13 HOF-capture fix)
@@ -1680,16 +1652,13 @@ def qg19_snapshot_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     int/int divisions, DECIMAL-summed.
     """
     d = table(spark, sf_dir, "documents")
-    sh = _doc_shingles(d)
+    sh = shingles(d)
     base_sh = sh.filter(F.col("doc_id") % 3 != 0).select("shingle").distinct()
     delta = sh.filter(F.col("doc_id") % 3 == 0)
     per_doc = (
         delta.join(base_sh.withColumn("_b", F.lit(1)), "shingle", "left")
-        .groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_sh"),
-            F.sum(F.when(F.col("_b").isNull(), 1).otherwise(0)).alias("n_new"),
-        )
+        .groupBy("doc_id", "n_sh")
+        .agg(F.sum(F.when(F.col("_b").isNull(), 1).otherwise(0)).alias("n_new"))
     )
     return (
         per_doc.join(d.select("doc_id", "source"), "doc_id")

@@ -31,34 +31,12 @@ from pyspark_distributed_kmodes_spark.functions.deterministic import (
     sql_dsum,
     sql_pround,
 )
+from pyspark_distributed_kmodes_spark.functions.shingles import shingles
 from pyspark_distributed_kmodes_spark.operators.analytics4 import _md5fold, _sql_md5fold
 from pyspark_distributed_kmodes_spark.operators.curation2 import _dterm, _sql_dterm
 from pyspark_distributed_kmodes_spark.registry import query
 from pyspark_distributed_kmodes_spark.session import scratch_dir
-from pyspark_distributed_kmodes_spark.sources.tables import spread, table
-
-
-def _shingles(d: DataFrame) -> DataFrame:
-    """Distinct (doc_id, word-trigram shingle) — the inverted-index unit
-    shared with text.ngram_jaccard_pairs (same guard for <3-word docs).
-    Per-doc dedup is LOCAL (array_distinct before the explode); the old
-    cross-row .distinct() paid a full exchange for the same rows."""
-    # split materialized once per row — captured in the transform lambda
-    # it re-runs per shingle position (r13 HOF-capture fix; A/B min
-    # 2.1 -> 0.8 CPU-s at sf0.1 for this exact shape)
-    words = F.col("_w")
-    n = F.size(words)
-    arr = F.when(
-        n >= 3,
-        F.array_distinct(
-            F.transform(F.sequence(F.lit(1), n - 2), lambda i: F.array_join(F.slice(words, i, 3), " "))
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    return (
-        spread(d, "doc_id")
-        .withColumn("_w", F.split("text", " "))
-        .select("doc_id", F.explode(arr).alias("shingle"))
-    )
+from pyspark_distributed_kmodes_spark.sources.tables import table
 
 
 _I_SHINGLE_CTE = """
@@ -155,7 +133,7 @@ def qi01_incremental_neardup_edges(spark: SparkSession, sf_dir: str) -> DataFram
     # base-only run's shingles are exactly sh_all filtered to base —
     # computing them once is identical to two runs, minus a second
     # scan+explode (bench: i01 5.8 s -> shared-index form).
-    sh_all = _shingles(d)
+    sh_all = shingles(d)
     sizes = sh_all.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_shingles"))
     sizes = sizes.transform(cut_lineage)
     sa = sizes.select(F.col("doc_id").alias("u"), F.col("n_shingles").alias("na"))

@@ -32,6 +32,7 @@ from pyspark_distributed_kmodes_spark.functions.deterministic import (
     sql_dsum,
     sql_pround,
 )
+from pyspark_distributed_kmodes_spark.functions.shingles import shingles
 from pyspark_distributed_kmodes_spark.operators.analytics4 import _md5fold, _sql_md5fold
 from pyspark_distributed_kmodes_spark.operators.curation2 import _dterm, _sql_dterm
 from pyspark_distributed_kmodes_spark.registry import query
@@ -559,10 +560,7 @@ def qj06_rolling_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # j07 — degree assortativity of the near-dup graph
 
-from pyspark_distributed_kmodes_spark.operators.analytics6 import (  # noqa: E402
-    _I_SHINGLE_CTE,
-    _shingles,
-)
+from pyspark_distributed_kmodes_spark.operators.analytics6 import _I_SHINGLE_CTE  # noqa: E402
 
 
 @query(
@@ -1390,18 +1388,18 @@ def qj17_dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     materializing only the thresholded edges.
     """
     d = table(spark, sf_dir, "documents")
-    sh = _shingles(d).transform(cut_lineage)
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_shingles"))
+    sh = shingles(d).transform(cut_lineage)
     a = sh.alias("a")
     b = sh.alias("b")
-    pairs = (
-        a.join(b, (F.col("a.shingle") == F.col("b.shingle")) & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .groupBy(F.col("a.doc_id").alias("u"), F.col("b.doc_id").alias("v"))
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
     scored = (
-        pairs.join(sizes.select(F.col("doc_id").alias("u"), F.col("n_shingles").alias("na")), "u")
-        .join(sizes.select(F.col("doc_id").alias("v"), F.col("n_shingles").alias("nb")), "v")
+        a.join(b, (F.col("a.shingle") == F.col("b.shingle")) & (F.col("a.doc_id") < F.col("b.doc_id")))
+        .groupBy(
+            F.col("a.doc_id").alias("u"),
+            F.col("b.doc_id").alias("v"),
+            F.col("a.n_sh").alias("na"),
+            F.col("b.n_sh").alias("nb"),
+        )
+        .agg(F.count(F.lit(1)).alias("n_common"))
         .select(
             "u",
             "v",

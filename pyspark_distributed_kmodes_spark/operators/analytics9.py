@@ -29,7 +29,8 @@ from pyspark_distributed_kmodes_spark.functions.deterministic import (
     sql_dsum,
     sql_pround,
 )
-from pyspark_distributed_kmodes_spark.operators.analytics4 import _md5fold, _sql_md5fold
+from pyspark_distributed_kmodes_spark.functions.shingles import shingle_arrays
+from pyspark_distributed_kmodes_spark.operators.analytics4 import _md5fold, _mh_mins, _sql_md5fold
 from pyspark_distributed_kmodes_spark.operators.analytics8 import _SQL_DAY_IDX, _day_idx
 from pyspark_distributed_kmodes_spark.registry import query
 from pyspark_distributed_kmodes_spark.session import scratch_dir
@@ -1431,7 +1432,9 @@ def qk17_ngram_dup_mass(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     d = table(spark, sf_dir, "documents")
     words = F.split("text", " ")
-    starts = F.sequence(F.lit(1), F.size(words) - (_K17_N - 1))
+    # docs shorter than the width have no n-grams: unguarded, the
+    # sequence would run DOWN through 0 and crash F.slice
+    starts = F.when(F.size(words) >= _K17_N, F.sequence(F.lit(1), F.size(words) - (_K17_N - 1)))
     grams = d.select(F.explode(starts).alias("s"), words.alias("w")).select(
         F.md5(F.array_join(F.slice("w", F.col("s"), _K17_N), " ")).alias("g")
     )
@@ -4662,10 +4665,8 @@ def ql12_minhash_band_routing(spark: SparkSession, sf_dir: str) -> DataFrame:
     count comes from the bucket-size histogram, not from enumerating
     pairs.
     """
-    from pyspark_distributed_kmodes_spark.operators.analytics4 import _doc_shingle_arrays, _mh_mins
-
     d = table(spark, sf_dir, "documents")
-    sigs = _mh_mins(_doc_shingle_arrays(d))
+    sigs = _mh_mins(shingle_arrays(d))
     band_structs = F.array(
         *[
             F.struct(

@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from pyspark_distributed_kmodes_spark.functions.deterministic import pround, sql_pround
+from pyspark_distributed_kmodes_spark.functions.shingles import shingles
 from pyspark_distributed_kmodes_spark.operators.curation2 import _dterm, _sql_dterm
 from pyspark_distributed_kmodes_spark.registry import query
 from pyspark_distributed_kmodes_spark.sources.tables import table
@@ -145,38 +146,23 @@ def qe02_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     doubles both engines); the emitted copy is pround(6).
     """
     d = table(spark, sf_dir, "documents")
-    # split materialized once per row — captured in the transform lambda
-    # it re-runs per shingle position (O(words²) splits per doc; the
-    # r13 HOF-capture fix, same as curation2's shingle pipeline)
-    words = F.col("_w")
-    n = F.size(words)
-    shingle_arr = F.when(
-        n >= 3,
-        F.transform(
-            F.sequence(F.lit(0), n - 3),
-            lambda i: F.array_join(F.slice(words, i + 1, 3), " "),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    shingles = (
-        d.withColumn("_w", _words())
-        .select("doc_id", F.explode(shingle_arr).alias("shingle"))
-        .distinct()
-    )
-    sizes = shingles.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_shingles"))
-    a, b = shingles.alias("a"), shingles.alias("b")
+    sh = shingles(d)
+    a, b = sh.alias("a"), sh.alias("b")
+    # |A| rides on the index as a.n_sh: grouping by it adds no groups
     pairs = (
         a.join(b, (F.col("a.shingle") == F.col("b.shingle")) & (F.col("a.doc_id") != F.col("b.doc_id")))
-        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
+        .groupBy(
+            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"), F.col("a.n_sh").alias("n_a")
+        )
         .agg(F.count(F.lit(1)).alias("n_common"))
     )
-    cont = F.col("n_common").cast("double") / F.col("n_shingles")
+    cont = F.col("n_common").cast("double") / F.col("n_a")
     return (
-        pairs.join(sizes.withColumnRenamed("doc_id", "doc_a"), "doc_a")
-        .filter(cont >= _CONTAIN_T)
+        pairs.filter(cont >= _CONTAIN_T)
         .select(
             "doc_a",
             "doc_b",
-            F.col("n_shingles").cast("bigint").alias("n_a"),
+            F.col("n_a").cast("bigint").alias("n_a"),
             F.col("n_common").cast("bigint").alias("n_common"),
             pround(cont, 6).alias("containment"),
         )

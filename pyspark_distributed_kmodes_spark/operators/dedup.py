@@ -18,6 +18,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from pyspark_distributed_kmodes_spark.functions.deterministic import pround
+from pyspark_distributed_kmodes_spark.functions.shingles import shingle_arrays, shingles
 from pyspark_distributed_kmodes_spark.registry import query
 from pyspark_distributed_kmodes_spark.sources.tables import spread, table
 
@@ -26,41 +27,13 @@ N_BANDS = 8  # LSH bands (rows per band = 32/8 = 4)
 SIMHASH_BITS = 48  # bits in the simhash (kept under 63 → positive bigint)
 
 
-def doc_shingle_arrays(docs: DataFrame, n: int = 3) -> DataFrame:
-    """(doc_id, sh: array<string>) — distinct word n-gram shingles per
-    doc, computed LOCALLY (array_distinct inside the row): no cross-row
-    distinct exchange, and signature functions can fold over the array
-    without ever exploding it."""
-    # split materialized as its own projection: captured inside the
-    # transform lambda it would re-run per shingle position (O(words²)
-    # splits per doc — see doc_trigram_shingles, same fix)
-    words = F.col("_w")
-    count = F.size(words) - (n - 1)
-    shingle_arr = F.when(
-        count >= 1,
-        F.array_distinct(
-            F.transform(F.sequence(F.lit(1), count), lambda i: F.array_join(F.slice(words, i, n), " "))
-        ),
-    ).otherwise(F.array(F.col("text")))
-    return (
-        spread(docs, "doc_id")
-        .withColumn("_w", F.split("text", " "))
-        .select("doc_id", shingle_arr.alias("sh"))
-    )
-
-
-def shingle_df(docs: DataFrame, n: int = 3) -> DataFrame:
-    """Distinct word n-gram shingles per doc: (doc_id, shingle)."""
-    return doc_shingle_arrays(docs, n).select("doc_id", F.explode("sh").alias("shingle"))
-
-
 def minhash_signatures(docs: DataFrame, n_hashes: int = N_HASHES) -> DataFrame:
     """(doc_id, sig: array<bigint>) — sig[i] = min over shingles of
     xxhash64(shingle, i), folded LOCALLY over the per-doc shingle array
     (array_min over a transform): ZERO shuffles — the old explode +
     groupBy form paid one exchange of every (doc_id, shingle) row for
     the same mins."""
-    ds = doc_shingle_arrays(docs)
+    ds = shingle_arrays(docs, short_doc="text")
     sig = F.array(
         *[
             F.array_min(F.transform("sh", lambda x: F.xxhash64(x, F.lit(i))))
@@ -293,8 +266,8 @@ def qo66_minhash_mllib(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.ml.feature import HashingTF, MinHashLSH
 
     docs = table(spark, sf_dir, "documents")
-    sh = shingle_df(docs).groupBy("doc_id").agg(F.collect_list("shingle").alias("shingles"))
-    tf = HashingTF(inputCol="shingles", outputCol="features", numFeatures=1 << 18)
+    sh = shingle_arrays(docs, short_doc="text")
+    tf = HashingTF(inputCol="sh", outputCol="features", numFeatures=1 << 18)
     feats = tf.transform(sh)
     lsh = MinHashLSH(inputCol="features", outputCol="hashes", numHashTables=8, seed=42)
     model = lsh.fit(feats)
@@ -616,10 +589,10 @@ def qo75_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     # both shingle indexes have two consumers each (hits + per_train /
     # distinct set): materialize once so the collapse+shingle pipeline
     # isn't replayed per consumer (scan-lint)
-    tr = shingle_df(_reps(train_all)).select(
+    tr = shingles(_reps(train_all), short_doc="text").select(
         F.col("doc_id").alias("train_doc"), "shingle"
     ).transform(cut_lineage)
-    ev = shingle_df(_reps(eval_all)).select(
+    ev = shingles(_reps(eval_all), short_doc="text").select(
         F.col("doc_id").alias("eval_doc"), "shingle"
     ).transform(cut_lineage)
     hits = tr.join(ev, "shingle")

@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pyspark_distributed_kmodes_spark.functions.deterministic import davg, pround, sql_davg
+from pyspark_distributed_kmodes_spark.functions.shingles import shingles as doc_shingles
 from pyspark_distributed_kmodes_spark.registry import query
 from pyspark_distributed_kmodes_spark.sources.tables import table
 
@@ -209,54 +210,6 @@ ORDER BY doc_a, doc_b
 """
 
 
-def doc_trigram_shingles(d: DataFrame) -> DataFrame:
-    """(doc_id, n_sh, shingle) — per-doc DISTINCT word-trigram shingles,
-    the dedup happening LOCALLY (array_distinct before the explode; the
-    old cross-row .distinct() paid a full exchange for the same rows).
-    `n_sh` = the doc's distinct-shingle-set size, computed from the
-    SAME array the explode consumes (r14): riding it on every index row
-    costs one int per row but lets ngram_jaccard_pairs drop its
-    index-wide sizes aggregate AND both pair⋈sizes joins — at 100 TB
-    those are two corpus-scale shuffles. Shared by ngram_jaccard_pairs
-    and callers that also need the index for another pass (qg04's
-    signatures) so one materialization serves both."""
-    # the split is materialized as its own projection BEFORE the
-    # transform: an expression captured inside a higher-order-function
-    # lambda is re-evaluated PER ELEMENT (the round-13 profile showed
-    # the full split(text) running once per shingle position — O(words²)
-    # splits per doc, ~2× the CPU of the whole shingle stage)
-    words = F.col("_w")
-    n = F.size(words)
-    # trigram shingles: words[i..i+2] for i in 0..n-3 (1-based slice);
-    # guarded so docs with <3 words produce an empty array, not a crash
-    shingle_arr = F.when(
-        n >= 3,
-        F.array_distinct(
-            F.transform(F.sequence(F.lit(1), n - 2), lambda i: F.array_join(F.slice(words, i, 3), " "))
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    from pyspark_distributed_kmodes_spark.sources.tables import spread
-
-    # the explode argument is WRAPPED in a cheap column-ref CASE: a bare
-    # column generator triggers InferFiltersFromGenerate, whose inferred
-    # size(...)>0 filter is pushed below the _sh/_w projections with the
-    # FULL expression substituted back in — re-running the per-element
-    # split the _w hoist exists to avoid, per row, in the filter
-    # (measured 2x the whole pipeline). A CASE generator is skipped by
-    # the rule (same shape the pre-r14 code had); semantics unchanged
-    # (empty arrays explode to no rows either way).
-    return (
-        spread(d, "doc_id")
-        .withColumn("_w", F.split("text", " "))
-        .withColumn("_sh", shingle_arr)
-        .select(
-            "doc_id",
-            F.size("_sh").alias("n_sh"),
-            F.explode(F.when(F.size("_sh") > 0, F.col("_sh"))).alias("shingle"),
-        )
-    )
-
-
 def ngram_jaccard_pairs(
     d: DataFrame,
     threshold: float = 0.2,
@@ -290,26 +243,27 @@ def ngram_jaccard_pairs(
     hot buckets instead of materializing per-shingle arrays.
 
     Short docs (< 3 words) yield no shingles — same as the SQL oracle,
-    where the slice range is empty; the unguarded sequence(1, n-2) would
-    instead go DESCENDING through 0 and crash F.slice.
+    where the slice range is empty.
 
-    `shingles` — an optional pre-built AND pre-materialized
-    (doc_id, shingle) index in doc_trigram_shingles' shape; callers
+    `shingles` — an optional pre-built AND pre-materialized index in
+    `functions.shingles.shingles`' (doc_id, n_sh, shingle) shape; callers
     that need the same index for another pass hand it in so it is
     computed once (qg04: truth pairs + MinHash signatures). A provided
-    index is used as-is (no second lineage cut).
+    index is used as-is (no second lineage cut). Invariant: `n_sh`
+    equals the doc's row count in the index BEFORE any `max_df` filter
+    (the cap is subtracted here); an index without `n_sh` raises
+    ValueError.
     """
     provided = shingles is not None
     if shingles is None:
-        shingles = doc_trigram_shingles(d)
-    # r14: the per-doc set size `n_sh` rides on every index row (one int
-    # — computed from the SAME pre-explode array), so the pair join can
-    # GROUP the sizes through instead of re-deriving them with an
-    # index-wide aggregate + two pair⋈sizes joins. At 100 TB the sizes
-    # table is corpus-sized (one row per doc) — those two joins were two
-    # full shuffles of the pair set. A provided index without n_sh
-    # (back-compat) falls back to the aggregate+join form.
-    has_nsh = "n_sh" in shingles.columns
+        shingles = doc_shingles(d)
+    elif "n_sh" not in shingles.columns:
+        raise ValueError("ngram_jaccard_pairs: the shingles index must carry n_sh")
+    # the per-doc set size `n_sh` rides on every index row, so the pair
+    # join GROUPS the sizes through instead of re-deriving them with an
+    # index-wide aggregate + two pair⋈sizes joins (at 100 TB the sizes
+    # table is corpus-sized — those two joins were two full shuffles of
+    # the pair set)
     corr = None  # per-doc count of CAPPED shingles (max_df path only)
     if max_df is not None:
         # materialize the RAW index FIRST (r13): the census aggregate and
@@ -326,19 +280,16 @@ def ngram_jaccard_pairs(
             .filter(F.col("df") > max_df)
             .select("shingle")
         )
-        if has_nsh:
-            # max_df removes hot shingles from the universe, so a doc's
-            # EFFECTIVE size is n_sh minus its hot members. The
-            # correction table is bounded by docs-that-contain-a-hot-
-            # shingle (usually empty; hot sets are tiny by construction)
-            # — two broadcast joins of it replace the two corpus-scale
-            # sizes joins. Identical numbers: n_sh − n_hot ==
-            # count(filtered index rows per doc), the former sizes.
-            corr = (
-                shingles.join(F.broadcast(hot), "shingle", "left_semi")
-                .groupBy("doc_id")
-                .agg(F.count(F.lit(1)).alias("n_hot"))
-            )
+        # max_df removes hot shingles from the universe, so a doc's
+        # EFFECTIVE size is n_sh minus its hot members. The correction
+        # table is bounded by docs-that-contain-a-hot-shingle (usually
+        # empty; hot sets are tiny by construction) and joins the pairs
+        # twice by broadcast.
+        corr = (
+            shingles.join(F.broadcast(hot), "shingle", "left_semi")
+            .groupBy("doc_id")
+            .agg(F.count(F.lit(1)).alias("n_hot"))
+        )
         shingles = shingles.join(F.broadcast(hot), "shingle", "left_anti")
     # the shingle index feeds both self-join sides (plus the hot-set
     # scan above): materialize once instead of recomputing the
@@ -350,40 +301,32 @@ def ngram_jaccard_pairs(
         shingles = shingles.transform(cut_lineage)
     a = shingles.alias("a")
     b = shingles.alias("b")
-    joined = a.join(
-        b, (F.col("a.shingle") == F.col("b.shingle")) & (F.col("a.doc_id") < F.col("b.doc_id"))
-    )
-    if has_nsh:
-        # na/nb are functionally dependent on doc_a/doc_b — grouping by
-        # them adds no groups and removes both sizes joins
-        pairs = joined.groupBy(
+    # na/nb are functionally dependent on doc_a/doc_b — grouping by them
+    # adds no groups
+    pairs = (
+        a.join(b, (F.col("a.shingle") == F.col("b.shingle")) & (F.col("a.doc_id") < F.col("b.doc_id")))
+        .groupBy(
             F.col("a.doc_id").alias("doc_a"),
             F.col("b.doc_id").alias("doc_b"),
             F.col("a.n_sh").alias("na"),
             F.col("b.n_sh").alias("nb"),
-        ).agg(F.count(F.lit(1)).alias("n_common"))
-        if corr is not None:
-            ca = corr.select(F.col("doc_id").alias("doc_a"), F.col("n_hot").alias("_ha"))
-            cb = corr.select(F.col("doc_id").alias("doc_b"), F.col("n_hot").alias("_hb"))
-            pairs = (
-                pairs.join(F.broadcast(ca), "doc_a", "left")
-                .join(F.broadcast(cb), "doc_b", "left")
-                .select(
-                    "doc_a",
-                    "doc_b",
-                    "n_common",
-                    (F.col("na") - F.coalesce("_ha", F.lit(0))).alias("na"),
-                    (F.col("nb") - F.coalesce("_hb", F.lit(0))).alias("nb"),
-                )
+        )
+        .agg(F.count(F.lit(1)).alias("n_common"))
+    )
+    if corr is not None:
+        ca = corr.select(F.col("doc_id").alias("doc_a"), F.col("n_hot").alias("_ha"))
+        cb = corr.select(F.col("doc_id").alias("doc_b"), F.col("n_hot").alias("_hb"))
+        pairs = (
+            pairs.join(F.broadcast(ca), "doc_a", "left")
+            .join(F.broadcast(cb), "doc_b", "left")
+            .select(
+                "doc_a",
+                "doc_b",
+                "n_common",
+                (F.col("na") - F.coalesce("_ha", F.lit(0))).alias("na"),
+                (F.col("nb") - F.coalesce("_hb", F.lit(0))).alias("nb"),
             )
-    else:
-        sizes = shingles.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_shingles"))
-        pairs = joined.groupBy(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        ).agg(F.count(F.lit(1)).alias("n_common"))
-        sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_shingles").alias("na"))
-        sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_shingles").alias("nb"))
-        pairs = pairs.join(sa, "doc_a").join(sb, "doc_b")
+        )
     jac = F.col("n_common").cast("double") / (F.col("na") + F.col("nb") - F.col("n_common"))
     return (
         pairs.filter(jac >= threshold)

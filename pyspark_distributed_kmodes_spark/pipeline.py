@@ -24,6 +24,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from pyspark_distributed_kmodes_spark.functions.shingles import shingles
+
 
 def quality_filter(
     docs: DataFrame,
@@ -88,10 +90,8 @@ def decontaminate(train: DataFrame, eval_docs: DataFrame, min_shared_shingles: i
     """Remove training docs sharing ≥ min_shared_shingles distinct word
     trigrams with the eval set (a75). Eval shingles broadcast — for a
     real benchmark the sweep is a map-side scan of the corpus."""
-    from pyspark_distributed_kmodes_spark.operators.dedup import shingle_df
-
-    tr_sh = shingle_df(train)
-    ev_sh = shingle_df(eval_docs).select("shingle").distinct()
+    tr_sh = shingles(train, short_doc="text")
+    ev_sh = shingles(eval_docs, short_doc="text").select("shingle").distinct()
     hits = (
         tr_sh.join(F.broadcast(ev_sh), "shingle")
         .groupBy("doc_id")

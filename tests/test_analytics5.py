@@ -53,16 +53,17 @@ def test_shard_reconciliation_loss_free(spark, sf_dir, reg):
 def test_minhash_md5_signature_deterministic_and_copy_stable(spark):
     """Exact copies get identical signatures; the signature is stable
     across partitionings (the md5 minhash is a pure function)."""
-    from pyspark_distributed_kmodes_spark.operators.analytics4 import _doc_shingle_arrays, _mh_mins
+    from pyspark_distributed_kmodes_spark.functions.shingles import shingle_arrays
+    from pyspark_distributed_kmodes_spark.operators.analytics4 import _mh_mins
 
     rows = [(1, "alpha beta gamma delta epsilon"), (2, "alpha beta gamma delta epsilon"),
             (3, "one two three four five six")]
     d = spark.createDataFrame(rows, "doc_id long, text string")
-    sigs = {r.doc_id: tuple(r[i] for i in range(1, 9)) for r in _mh_mins(_doc_shingle_arrays(d)).collect()}
+    sigs = {r.doc_id: tuple(r[i] for i in range(1, 9)) for r in _mh_mins(shingle_arrays(d)).collect()}
     assert sigs[1] == sigs[2]
     assert sigs[1] != sigs[3]
     d7 = spark.createDataFrame(rows, "doc_id long, text string").repartition(7)
-    sigs7 = {r.doc_id: tuple(r[i] for i in range(1, 9)) for r in _mh_mins(_doc_shingle_arrays(d7)).collect()}
+    sigs7 = {r.doc_id: tuple(r[i] for i in range(1, 9)) for r in _mh_mins(shingle_arrays(d7)).collect()}
     assert sigs == sigs7
 
 

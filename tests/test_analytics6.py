@@ -145,29 +145,22 @@ def test_orc_roundtrip_idempotent(spark, sf_dir, reg):
     assert a == b and len(a) > 0
 
 
-def test_partition_pruning_in_plan_and_idempotent(spark, sf_dir, reg):
+def test_partition_pruning_in_plan_and_idempotent(spark, sf_dir, reg, tmp_path):
     """The h11 scan must carry the event_type partition filter at
     planning time (PartitionFilters in the FileSourceScan), and the
     query must be re-invokable (temp-dir hygiene)."""
-    import shutil
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from pyspark_distributed_kmodes_spark.sources.tables import table
 
-    base = tempfile.mkdtemp(prefix="qh11_plan_")
-    try:
-        e = table(spark, sf_dir, "events")
-        e.write.mode("overwrite").partitionBy("event_type").parquet(base + "/events")
-        back = spark.read.parquet(base + "/events").filter(F.col("event_type") == "purchase")
-        plan = back._jdf.queryExecution().executedPlan().toString()
-        assert "PartitionFilters" in plan and "event_type" in plan
-        # pruning actually bites: scanned rows == purchase rows only
-        n_purchase = e.filter("event_type = 'purchase'").count()
-        assert back.count() == n_purchase
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+    e = table(spark, sf_dir, "events")
+    e.write.mode("overwrite").partitionBy("event_type").parquet(str(tmp_path / "events"))
+    back = spark.read.parquet(str(tmp_path / "events")).filter(F.col("event_type") == "purchase")
+    plan = back._jdf.queryExecution().executedPlan().toString()
+    assert "PartitionFilters" in plan and "event_type" in plan
+    # pruning actually bites: scanned rows == purchase rows only
+    n_purchase = e.filter("event_type = 'purchase'").count()
+    assert back.count() == n_purchase
     a = reg["qh11_partition_pruned_scan"].fn(spark, sf_dir).collect()
     b = reg["qh11_partition_pruned_scan"].fn(spark, sf_dir).collect()
     assert a == b and len(a) > 0

@@ -159,14 +159,6 @@ def test_p20_matches_python_replay(spark, sf_dir, reg, duck):
     assert all(r.pruned_vs_full_diff == 0 for r in rows)
 
 
-def test_p20_shuffle_partitions_conf_restored(spark, sf_dir, reg):
-    """The key pins state partitions by temporarily setting
-    spark.sql.shuffle.partitions; the session conf must come back."""
-    before = spark.conf.get("spark.sql.shuffle.partitions")
-    reg["p20_state_reader_partition_pruning"].fn(spark, sf_dir).collect()
-    assert spark.conf.get("spark.sql.shuffle.partitions") == before
-
-
 # ---------------------------------------------------------------------------
 # p21 — foreachBatch multi-sink
 
@@ -392,12 +384,6 @@ def test_p29_facts_and_law(spark, sf_dir, reg, duck):
         ).fetchall()
     }
     assert {r.user_id: r.n_buffered for r in rows} == law
-
-
-def test_p29_restores_shuffle_partitions(spark, sf_dir, reg):
-    before = spark.conf.get("spark.sql.shuffle.partitions")
-    reg["p29_join_state_change_feed"].fn(spark, sf_dir).collect()
-    assert spark.conf.get("spark.sql.shuffle.partitions") == before
 
 
 # ---------------------------------------------------------------------------

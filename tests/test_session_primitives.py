@@ -2,22 +2,24 @@
 factory), scoped_conf (the only conf save/restore) and
 drain_available_now (the only bounded availableNow wait).
 
-The guard test is Spark-free: an AST scan of the package, so names
-mentioned in docstrings and comments do not count."""
+The guard test is Spark-free: an AST scan of the package (and, for
+temp dirs, of the tests, which take theirs from pytest's tmp_path), so
+names mentioned in docstrings and comments do not count."""
 
 import ast
 import pathlib
 
 import pytest
 
-PKG = pathlib.Path(__file__).resolve().parent.parent / "pyspark_distributed_kmodes_spark"
+TESTS = pathlib.Path(__file__).resolve().parent
+PKG = TESTS.parent / "pyspark_distributed_kmodes_spark"
 
 
-def _calls(attr: str):
+def _calls(attr: str, root: pathlib.Path = PKG, pattern: str = "**/*.py"):
     """(file, enclosing function, line) of every call to `<x>.attr(...)`
-    or `attr(...)` in the package."""
+    or `attr(...)` in the files under `root` matching `pattern`."""
     found = []
-    for path in sorted(PKG.rglob("*.py")):
+    for path in sorted(root.glob(pattern)):
         tree = ast.parse(path.read_text(), filename=str(path))
         stack = [(tree, None)]
         while stack:
@@ -28,7 +30,7 @@ def _calls(attr: str):
                 f = node.func
                 name = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)
                 if name == attr:
-                    found.append((path.relative_to(PKG).as_posix(), fn, node.lineno))
+                    found.append((path.relative_to(root).as_posix(), fn, node.lineno))
             stack.extend((child, fn) for child in ast.iter_child_nodes(node))
     return found
 
@@ -36,6 +38,8 @@ def _calls(attr: str):
 def test_temp_dirs_and_stream_waits_go_through_one_primitive_each():
     mkdtemp = [c for c in _calls("mkdtemp") if c[:2] != ("session.py", "scratch_dir")]
     assert not mkdtemp, f"mkdtemp outside session.scratch_dir: {mkdtemp}"
+    in_tests = _calls("mkdtemp", TESTS, "*.py")
+    assert not in_tests, f"mkdtemp in tests (use tmp_path): {in_tests}"
     waits = [
         c
         for c in _calls("awaitTermination")

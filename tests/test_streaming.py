@@ -241,12 +241,10 @@ def test_stream_stream_join_matches_batch(spark, sf_dir):
     assert got == want and len(want) > 0
 
 
-def test_foreachbatch_upsert_incremental(spark, sf_dir):
+def test_foreachbatch_upsert_incremental(spark, sf_dir, tmp_path):
     """foreachBatch upsert sink, driven over MULTIPLE micro-batches
     (maxFilesPerTrigger=1 over a 3-file split), must converge to the
     batch 'latest event per (user, event_type)' result."""
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from pyspark_distributed_kmodes_spark.operators.events import q34_latest_event_dedup
@@ -254,7 +252,7 @@ def test_foreachbatch_upsert_incremental(spark, sf_dir):
     from pyspark_distributed_kmodes_spark.streaming.jobs import upsert_sink_stream
 
     e = table(spark, sf_dir, "events")
-    src = tempfile.mkdtemp(prefix="upsert_src_")
+    src = str(tmp_path / "src")
     # 3 files split by time so later batches genuinely overwrite earlier keys
     e.withColumn("_b", F.ntile(3).over(__import__("pyspark").sql.Window.orderBy("ts", "event_id"))) \
         .repartition(1).sortWithinPartitions("_b").write.mode("overwrite").partitionBy("_b").parquet(src)
@@ -265,7 +263,7 @@ def test_foreachbatch_upsert_incremental(spark, sf_dir):
         .option("maxFilesPerTrigger", "1")
         .parquet(src)
     )
-    target = tempfile.mkdtemp(prefix="upsert_tgt_") + "/t"
+    target = str(tmp_path / "t")
     upsert_sink_stream(spark, stream, target, ["user_id", "event_type"], ["ts", "event_id"])
 
     got = {
@@ -281,19 +279,17 @@ def test_foreachbatch_upsert_incremental(spark, sf_dir):
         assert ts == want[k][0], k
 
 
-def test_foreachbatch_upsert_out_of_order_batches(spark, sf_dir):
+def test_foreachbatch_upsert_out_of_order_batches(spark, sf_dir, tmp_path):
     """A later micro-batch that carries an OLDER event for a key (file
     listing order is not event-time order) must not regress the target:
     the merge keeps the max order_cols row per key, not last-batch-wins."""
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from pyspark_distributed_kmodes_spark.sources.tables import table
     from pyspark_distributed_kmodes_spark.streaming.jobs import upsert_sink_stream
 
     e = table(spark, sf_dir, "events").limit(200)
-    src = tempfile.mkdtemp(prefix="upsert_ooo_src_")
+    src = str(tmp_path / "src")
     # REVERSED time split: batch 1 gets the NEWEST events, batch 3 the oldest
     e.withColumn(
         "_b", F.ntile(3).over(__import__("pyspark").sql.Window.orderBy(F.desc("ts"), F.desc("event_id")))
@@ -301,7 +297,7 @@ def test_foreachbatch_upsert_out_of_order_batches(spark, sf_dir):
 
     raw = spark.read.parquet(src)
     stream = spark.readStream.schema(raw.schema).option("maxFilesPerTrigger", "1").parquet(src)
-    target = tempfile.mkdtemp(prefix="upsert_ooo_tgt_") + "/t"
+    target = str(tmp_path / "t")
     upsert_sink_stream(spark, stream, target, ["user_id", "event_type"], ["ts", "event_id"])
 
     got = {(r.user_id, r.event_type): (r.ts, r.event_id) for r in spark.read.parquet(target).collect()}
@@ -319,13 +315,11 @@ def test_foreachbatch_upsert_out_of_order_batches(spark, sf_dir):
     assert got == want and len(got) > 0
 
 
-def test_continuous_rollup_matches_batch(spark, sf_dir):
+def test_continuous_rollup_matches_batch(spark, sf_dir, tmp_path):
     """Continuous-aggregate maintenance: watermarked tumbling counts in
     update mode upserted per batch (order col = the monotone count) must
     converge to EXACTLY the batch q30 aggregate — including the newest
     window, which append mode would hold in state forever."""
-    import tempfile
-
     from pyspark_distributed_kmodes_spark.operators.events import q30_tumbling_window
     from pyspark_distributed_kmodes_spark.streaming.jobs import (
         events_stream,
@@ -334,7 +328,7 @@ def test_continuous_rollup_matches_batch(spark, sf_dir):
     )
 
     rollup = tumbling_counts_stream(events_stream(spark, sf_dir), watermark="10 minutes")
-    target = tempfile.mkdtemp(prefix="rollup_test_") + "/hourly"
+    target = str(tmp_path / "hourly")
     upsert_sink_stream(spark, rollup, target, ["window_start", "event_type"], ["n_events"])
     maintained = spark.read.parquet(target).select("window_start", "event_type", "n_events")
     batch = q30_tumbling_window(spark, sf_dir).select("window_start", "event_type", "n_events")
@@ -342,14 +336,11 @@ def test_continuous_rollup_matches_batch(spark, sf_dir):
     assert batch.exceptAll(maintained).count() == 0
 
 
-def test_stateful_funnel_stream_matches_batch(spark, sf_dir):
+def test_stateful_funnel_stream_matches_batch(spark, sf_dir, tmp_path):
     """Custom stateful streaming funnel (applyInPandasWithState) must
     reach the batch z09 fixed point even when micro-batches arrive in
     REVERSED event-time order — a late earlier 'view' retroactively
     qualifies clicks the chain previously rejected."""
-    import shutil
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from pyspark_distributed_kmodes_spark.operators.events import qe09_event_funnel
@@ -358,7 +349,7 @@ def test_stateful_funnel_stream_matches_batch(spark, sf_dir):
 
     ev = table(spark, sf_dir, "events")
     med = ev.agg(F.percentile_approx("ts", 0.5).alias("m")).collect()[0]["m"]
-    src = tempfile.mkdtemp(prefix="funnel_src_")
+    src = str(tmp_path)
     # LATE half lands first, early half second: worst-case arrival order
     ev.filter(F.col("ts") > F.lit(med)).write.parquet(src + "/b=1")
     ev.filter(F.col("ts") <= F.lit(med)).write.parquet(src + "/b=2")
@@ -390,7 +381,6 @@ def test_stateful_funnel_stream_matches_batch(spark, sf_dir):
     }
     batch = {r.stage: r.n_users for r in qe09_event_funnel(spark, sf_dir).collect()}
     assert stream_counts == {1: batch[1], 2: batch[2], 3: batch[3]}
-    shutil.rmtree(src, ignore_errors=True)
 
 
 def test_sliding_distinct_users_stream_matches_batch(spark, sf_dir, stream):
