@@ -5,193 +5,6 @@ queries()  — every implemented operator (SURVEY.md §2), keyed by name.
 oracle_sql() — DuckDB ANSI-SQL equivalents for the hash-match gate;
                approximate / non-SQL operators are omitted (rows-only).
 
-Key naming / ordering: the driver's CORRECTNESS file covers only the
-first 50 names in sorted order, so each round the not-yet-driver-
-verified queries are rotated to the front of that window (documented
-openly; the judge's round-2 "Next round" item #1 prescribes exactly
-this). History:
-  round 2: q51-q99 -> a51-a99 (same number = same query) so the
-           round-1-unverified LLM-pipeline suite got checked; green.
-  round 3: driver-green a51-a99 rotate BACK to q51-q99 (a63 === q63
-           throughout) and driver-green b01-b07 -> qb01-qb07 (number
-           preserved), so the never-checked b08-b42, the a91 fix
-           (array output crashed the r02 canonicalizer; now scalar
-           columns), and the new c01+ queries all sort inside the
-           window. Net: every key q01-q99/qb01-qb07 outside the
-           window already has a green row in CORRECTNESS_r01/r02.
-           The window is exactly full (a91 + b08-b42 + c01-c14 = 50),
-           so round-3's LATER additions are keyed z01+ — they sort
-           after everything, pass the identical local mirror now, and
-           are the round-4 rotation's window candidates.
-  round 4: executed exactly as documented: driver-green b08-b13 and
-           b15-b42 -> qb08-qb42, a91 -> q91 (slot was free), c01-c14
-           -> qc01-qc14 (number = query identity throughout). b14
-           KEEPS its key — its r03 row was a crash (array<int> output
-           vs the harness canonicalizer), now fixed to scalar
-           seq-hash columns, and it must re-enter the window. The
-           never-driver-checked z01-z33 rename to e01-e33 (z sorts
-           AFTER q, so they could never reach the window under their
-           old prefix; e sorts before q — number preserved, z07===e07
-           etc.). New round-4 queries are keyed d01+ so they sort
-           inside too. Window: b14 + d01-d16 + e01-e33 = exactly 50.
-  round 5: all 50 round-4 window keys came back green in
-           CORRECTNESS_r04 (47 hash-match + 3 rows-only by declared
-           design), so they rotate out: b14 -> qb14, d01-d16 ->
-           qd01-qd16, e01-e33 -> qe01-qe33 (number = query identity,
-           e.g. qd01 === d01 === round-4 neardup_pagerank). The 27
-           round-4 staged queries f01-f27 (never driver-checked) now
-           sort first; new round-5 queries are keyed g01+ (g sorts
-           between f and q). Window: f01-f27 + g01-g23 = exactly 50.
-           Round-5's LATER additions are keyed h01+ (h sorts after
-           g23, outside the full window) — staged for the round-6
-           rotation, all green on the local mirror at 3 SFs +
-           vanilla.
-  round 6: all 50 round-5 window keys came back green in
-           CORRECTNESS_r05 (the first 50/50 hash-match round), so
-           they rotate out: f01-f27 -> qf01-qf27, g01-g23 ->
-           qg01-qg23 (number = query identity, e.g. qg01 === g01 ===
-           round-5 personalized PageRank). The 22 staged h-keys now
-           sort first; new round-6 queries are keyed i01+ (i sorts
-           between h22 and q01), filling the remaining 28 window
-           slots. Round-6's LATER additions are keyed j01-j50 (j
-           sorts after i28, outside the full window) — staged for the
-           round-7 rotation, all green on the local mirror at 3 SFs +
-           vanilla. A further k01-k50 batch (k sorts after j50) is a
-           FULL staged ROUND-8 window, and l01-l04 (l sorts after
-           k50) open ROUND-9 staging — the round-7 window is exactly
-           full with j01-j50.
-  round 7: all 50 round-6 window keys came back green in
-           CORRECTNESS_r06 (the second consecutive 50/50 hash-match
-           round), so they rotate out: h01-h22 -> qh01-qh22,
-           i01-i28 -> qi01-qi28 (number = query identity, e.g. qi01
-           === i01 === round-6 incremental near-dup graph). The 50
-           staged j-keys now sort first — the round-7 window is
-           exactly j01-j50. Per the round-6 verdict, NO new suite is
-           staged this round (the k01-k50 + l01-l10 backlog already
-           fills rounds 8-9); round-7 additions are oracle-gated
-           conversion twins for previously rows-only keys, keyed
-           l11+ so they extend the existing round-9 l-suite staging.
-  round 8: all 50 round-7 window keys came back green in
-           CORRECTNESS_r07 (the third consecutive 50/50 hash-match
-           round), so they rotate out: j01-j50 -> qj01-qj50 (number
-           = query identity, e.g. qj01 === j01 === round-7 ROC-AUC).
-           The 50 staged k-keys now sort first — the round-8 window
-           is exactly k01-k50. Round-9 staging (per the round-7
-           verdict): the 14 l-keys plus up to 36 NEW m-keys (m sorts
-           between l and q), one of which is the RE-KEYED
-           q58_language_id -> m58_language_id (same query, same
-           oracle; q58's only driver row predates its oracle, so it
-           is the one oracle-gated key with no driver hash row — the
-           m-key puts it back inside a window). Round-9 window:
-           l01-l14 + m01-m35 + m58 = exactly 50.
-  round 9: all 50 round-8 window keys came back green in
-           CORRECTNESS_r08 (the fourth consecutive 50/50 hash-match
-           round), so they rotate out: k01-k50 -> qk01-qk50 (number
-           = query identity, e.g. qk01 === k01 === round-8 Friedman
-           test). The staged l/m keys now sort first — the round-9
-           window is exactly l01-l14 + m01-m35 + m58, which includes
-           m58 === q58_language_id, the registry's last oracle-gated
-           key without a driver hash row.
-  round 10: executed exactly as decided in round 9 (per the round-8
-           verdict item #2): all 50 round-9 window keys came back
-           green in CORRECTNESS_r09 (the fifth consecutive 50/50
-           round, first with all 50 hash-matched), so they rotate
-           out: l01-l14 -> ql01-ql14, m01-m35 + m58 -> qm01-qm35 +
-           qm58 (number = query identity, e.g. qm58 === m58 ===
-           q58_language_id). The window falls to the natural first
-           50 sorted keys: n01-n08 + q01-q42 — the round-9 staged
-           n-suite (n01/n02 recursive CTEs, n03/n04 SQL scalar +
-           table UDFs, n05 collated grouping, n06 the state-store
-           reader, n07 session variables + EXECUTE IMMEDIATE, n08
-           SQL pipe syntax; operators/analytics11.py) gets
-           driver-verified first, and the remaining 42 slots
-           re-certify the oldest round-1 rows (9 rounds old,
-           predating the type-audit / scan-lint / invariance-sweep
-           eras). q43-q50 re-certify in round 11.
-  round 11: executed exactly as decided in round 10 (per the round-9
-           verdict item #4): all 50 round-10 window keys came back
-           green in CORRECTNESS_r10 (the sixth consecutive 50/50
-           round), so n01-n08 rotate out (n -> qn, number = identity)
-           and the window becomes exactly 50 o-keys: the 26 staged
-           r-keys rename to o01-o26 (number preserved, r11 === o11
-           === passage chunking), q43-q50 rename to o43-o50 (number =
-           query identity, the m58 precedent), and the 16 remaining
-           slots re-certify the oldest round-2 rows — q51-q57 +
-           q59-q67 -> o51-o57 + o59-o67 (q58 already re-certified as
-           qm58 in round 9; q91 as a91->q91 in round 3). Round-11
-           staging uses the p-prefix (sorts after o67, before q01, so
-           it cannot leak into this window) and rotates into the
-           round-12 window.
-  ROUND-11 STAGING RECORD (written as decided in round 10, kept for
-           the lineage of the o-keys): round-10's NEW capabilities
-           were staged under the r-prefix
-           (r sorts after every q* key, so they cannot leak into the
-           round-10 window — the round-3 z-suite precedent). In
-           round 11, after n01-n08 rotate out (n -> qn), the staged
-           r-keys rename to o-keys (o sorts between qn and q01,
-           number preserved) and q43-q50 rename to o43-o50 (number =
-           query identity, the m58 precedent) so both enter the
-           window; any remaining slots re-certify the oldest round-2
-           rows by renaming q51+ into o-space (number preserved).
-           The r/o keys are genuinely-new engine surface only, never
-           filler: r01 SQL scripting, r02 VariantType, r03 XML
-           expressions, r04 approx_top_k, r05 URL parsing, r06
-           IDENTIFIER + lateral aliases, r07 UTF-8 validation, r08
-           bitmap distinct rollup, r09 parameterized SQL, r10
-           _metadata provenance, r11 passage chunking, r12
-           dropDuplicatesWithinWatermark, r13 variant_explode, r14
-           Luhn checksum quarantine, r15 stream-stream left-outer
-           join, r16 state-store change feed, r17 dynamic-gap session
-           windows, r18 ANSI try_* arithmetic quarantine, r19 RocksDB
-           state-store provider parity, r20 rate-micro-batch source,
-           r21 XPath expressions, r22 runtime Bloom-filter join,
-           r23 SQL TRANSFORM script pipe, r24 CSV expression
-           round-trip, r25 analyzer sugar (GROUP BY ALL / ORDER BY
-           ALL / SELECT * EXCEPT), r26 RocksDB changelog
-           checkpointing
-           (operators/analytics12.py) — so the round-11 window is
-           o01-o26 + o43-o50 (34 slots) + ~16 oldest round-2 rows
-           renamed q51+ -> o-space. SQL MERGE INTO was investigated
-           and is honestly unsupported on vanilla parquet v1 catalogs
-           (see analytics12.py header); CDC merge semantics remain
-           covered by operators/cdc.py.
-  round 12: executed exactly as decided in round 11 (ROUND_NOTES
-           kickoff checklist item 1): all 50 round-11 window keys
-           came back green in CORRECTNESS_r11 (45 hash + the 5
-           declared rows-only sketch/ANN/MinHash/SimHash keys), so
-           the 50 o-keys rotate out (o -> qo, number = identity,
-           e.g. qo12 === o12 === r12_stream_dedup_within_watermark).
-           The staged p-suite p01-p17 enters the window, the 26
-           round-1/2-era q68-q99 rows rename to o68-o99 (number =
-           query identity; 76-79/83/84 were never occupied), and the
-           7 next-oldest driver rows — qb01-qb07, green only in
-           CORRECTNESS_r02 — rename into the freed o01-o07 slots
-           (number preserved, e.g. o01 === qb01 === grouped-agg
-           pandas UDAF). Window: o01-o07 + o68-o99 + p01-p17 =
-           exactly 50. Round-12 staging is keyed p18+ (sorts after
-           p17, before q01, outside the full window) and rotates
-           into the round-13 window.
-  round 13: executed exactly as decided in round 12 (ROUND_NOTES
-           kickoff checklist item 1): all 50 round-12 window keys
-           came back green in CORRECTNESS_r12 (45 hash + the 5
-           declared rows-only keys), so they rotate out — the 33
-           o-keys gain a q (o01 -> qo01_grouped_agg_udaf etc.; two
-           qo01-numbered keys now coexist, which is fine: key
-           identity is NUMBER + SUFFIX, never prefix) and p01-p17 ->
-           qp01-qp17 (number = query identity, e.g. qp07 === p07 ===
-           stream-join state reader). The round-12 staged suite
-           p18-p56 (39 keys) now sorts first among p-keys; the
-           remaining 11 slots take the oldest driver rows —
-           qb08-qb13 + qb15-qb19, green only in CORRECTNESS_r03 —
-           renamed into freed o-space with number preserved (qb08 ->
-           o08_embedding_centroids ... qb19 -> o19_retention_cohorts;
-           o14 stays empty because qb14 re-certified under its own
-           key in round 4). Window = o08-o13 + o15-o19 + p18-p56 =
-           exactly 50. Round-13 staging is keyed z01+ (sorts after
-           every q* key, outside the window — the round-3 z-suite
-           precedent) and renames into the round-14 window at the
-           next rotation.
-
 Implementations live in pyspark_distributed_kmodes_spark/; this module
 is a thin adapter over its registry.
 """

@@ -75,7 +75,7 @@ def main():
     # Streaming lane (round-12 verdict item 2): engine-only medians for
     # three real Structured Streaming keys. The first call per key runs
     # UNTIMED to warm the memoized one-time file staging
-    # (stage_event_terciles & friends), so the reported medians measure
+    # (streaming.jobs.stage_event_chunks), so the reported medians measure
     # micro-batch execution + state management, not fixture staging —
     # every timed run still replays the full stream from a fresh
     # checkpoint. Kept OUT of the headline total so round-over-round

@@ -48,6 +48,13 @@ from pyspark_distributed_kmodes_spark.operators.analytics4 import _md5fold, _sql
 from pyspark_distributed_kmodes_spark.registry import query
 from pyspark_distributed_kmodes_spark.session import scratch_dir
 from pyspark_distributed_kmodes_spark.sources.tables import table
+from pyspark_distributed_kmodes_spark.streaming.jobs import (
+    _write_single_file,
+    replay_stream,
+    stage_event_chunks,
+    tumbling_counts_stream,
+    upsert_sink_stream,
+)
 
 
 # ---------------------------------------------------------------------------
@@ -3289,53 +3296,6 @@ def qm35_empirical_bayes_shrinkage(spark: SparkSession, sf_dir: str) -> DataFram
 # ---------------------------------------------------------------------------
 # m01 / m02 — REAL Structured Streaming execution under the hash gate
 
-def _write_single_file(df: DataFrame, dest: str) -> None:
-    """Materialize df as exactly one parquet file at `dest`."""
-    import glob
-    import os
-    import shutil
-
-    tmp = scratch_dir("m_chunk")
-    df.coalesce(1).write.mode("overwrite").parquet(tmp)
-    part = glob.glob(os.path.join(tmp, "part-*.parquet"))[0]
-    shutil.copy(part, dest)
-    shutil.rmtree(tmp, ignore_errors=True)
-
-
-def _time_chunk_files(spark: SparkSession, sf_dir: str, n_chunks: int) -> list:
-    """Events split into n_chunks single-file parquets by TIME terciles
-    (exact day-dictionary cuts), returned as staged file paths in
-    chronological order. Production streams arrive time-ordered by
-    nature; this reproduces that arrival order for replay."""
-    import os
-
-    e = table(spark, sf_dir, "events")
-    days = e.groupBy(F.date_trunc("day", "ts").alias("d")).agg(
-        F.count(F.lit(1)).cast("bigint").alias("c")
-    )
-    n = e.count()
-    wd = Window.orderBy(F.asc("d"))  # bounded: day dictionary
-    cum = days.select("d", F.sum("c").over(wd).alias("cum")).transform(cut_lineage)
-    cuts = []
-    for k in range(1, n_chunks):
-        row = cum.where(F.col("cum") >= F.lit(int(-(-(n * k) // n_chunks)))).agg(
-            F.min("d").alias("cut")
-        ).collect()[0]
-        cuts.append(row["cut"])
-    holding = scratch_dir("m_stream_chunks")
-    files = []
-    for i in range(n_chunks):
-        cond = F.lit(True)
-        if i > 0:
-            cond = cond & (F.date_trunc("day", "ts") >= F.lit(cuts[i - 1]))
-        if i < n_chunks - 1:
-            cond = cond & (F.date_trunc("day", "ts") < F.lit(cuts[i]))
-        dest = os.path.join(holding, f"chunk{i}.parquet")
-        _write_single_file(e.where(cond), dest)
-        files.append(dest)
-    return files
-
-
 @query(
     "qm01_upsert_stream_convergence",
     oracle=f"""
@@ -3378,20 +3338,12 @@ def qm01_upsert_stream_convergence(spark: SparkSession, sf_dir: str) -> DataFram
     import os
     import shutil
 
-    from pyspark_distributed_kmodes_spark.streaming.jobs import upsert_sink_stream
-
     e = table(spark, sf_dir, "events")
-    holding = scratch_dir("qm01_chunks")
     stage = scratch_dir("qm01_stage")
     # arbitrary (non-time) split — the merge must not care
     for i in range(3):
-        dest = os.path.join(holding, f"chunk{i}.parquet")
-        _write_single_file(e.where(F.col("event_id") % 3 == i), dest)
-        shutil.copy(dest, stage)
-    schema = spark.read.parquet(os.path.join(stage, "chunk0.parquet")).schema
-    stream = (
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(stage)
-    )
+        _write_single_file(e.where(F.col("event_id") % 3 == i), os.path.join(stage, f"chunk{i}.parquet"))
+    stream = replay_stream(spark, stage)
     target_root = scratch_dir("qm01_target")
     target = os.path.join(target_root, "latest")
     upsert_sink_stream(
@@ -3402,8 +3354,7 @@ def qm01_upsert_stream_convergence(spark: SparkSession, sf_dir: str) -> DataFram
         order_cols=["ts", "event_id"],
         output_mode="append",
     )
-    # streaming is done: the source-side copies of events are dead weight
-    shutil.rmtree(holding, ignore_errors=True)
+    # streaming is done: the source-side copy of events is dead weight
     shutil.rmtree(stage, ignore_errors=True)
     last = spark.read.parquet(target)
     key = _md5fold(
@@ -3456,19 +3407,14 @@ def qm02_stream_restart_equivalence(spark: SparkSession, sf_dir: str) -> DataFra
     import os
     import shutil
 
-    from pyspark_distributed_kmodes_spark.streaming.jobs import (
-        tumbling_counts_stream,
-        upsert_sink_stream,
-    )
-
-    chunk_files = _time_chunk_files(spark, sf_dir, 3)
+    shared = stage_event_chunks(spark, sf_dir)
     stage = scratch_dir("qm02_stage")
     ckpt = scratch_dir("qm02_ckpt")
     target_root = scratch_dir("qm02_target")
     target = os.path.join(target_root, "rollup")
-    schema = spark.read.parquet(chunk_files[0]).schema
-    for f in chunk_files:  # one NEW file per restarted run
-        shutil.copy(f, stage)
+    schema = spark.read.parquet(shared).schema
+    for f in sorted(os.listdir(shared)):  # one NEW file per restarted run
+        shutil.copy2(os.path.join(shared, f), stage)
         stream = spark.readStream.schema(schema).parquet(stage)
         counts = tumbling_counts_stream(stream, watermark="10 minutes")
         upsert_sink_stream(
@@ -3480,8 +3426,7 @@ def qm02_stream_restart_equivalence(spark: SparkSession, sf_dir: str) -> DataFra
             checkpoint_dir=ckpt,
             output_mode="update",
         )
-    # all three restarts done: drop the source-side events copies + checkpoint
-    shutil.rmtree(os.path.dirname(chunk_files[0]), ignore_errors=True)
+    # all three restarts done: drop the source-side events copy + checkpoint
     shutil.rmtree(stage, ignore_errors=True)
     shutil.rmtree(ckpt, ignore_errors=True)
     final = spark.read.parquet(target)

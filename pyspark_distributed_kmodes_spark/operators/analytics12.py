@@ -158,7 +158,11 @@ from pyspark_distributed_kmodes_spark.functions.lineage import cut_lineage
 from pyspark_distributed_kmodes_spark.registry import query
 from pyspark_distributed_kmodes_spark.session import scoped_conf, scratch_dir
 from pyspark_distributed_kmodes_spark.sources.tables import table
-from pyspark_distributed_kmodes_spark.streaming.jobs import drain_available_now
+from pyspark_distributed_kmodes_spark.streaming.jobs import (
+    drain_available_now,
+    replay_stream,
+    stage_event_chunks,
+)
 
 # ---------------------------------------------------------------------------
 # r01 — SQL scripting: BEGIN...END control flow over a bounded aggregate
@@ -829,24 +833,6 @@ qo11_passage_chunking.__doc__ = qo11_passage_chunking.__doc__.replace("{W}", str
 )
 
 
-def _order_stage_files(stage: str) -> None:
-    """Force the file-stream replay order to match the chronological
-    chunk order: FileStreamSource batches files oldest-mtime-first, and
-    chunks copied in quick succession can land with TIED mtimes, making
-    the batch order — and therefore watermark advancement — depend on
-    arbitrary listing order (a 3-chunk jumble advances the watermark
-    early, silently dropping in-order data as 'late'). Strictly
-    increasing mtimes in path order pin the replay deterministically."""
-    import os
-
-    files = sorted(
-        os.path.join(stage, f) for f in os.listdir(stage) if f.endswith(".parquet")
-    )
-    base = os.stat(files[0]).st_mtime
-    for i, f in enumerate(files):
-        os.utime(f, (base + 10.0 * i, base + 10.0 * i))
-
-
 # ---------------------------------------------------------------------------
 # r12 — streaming dedup with bounded state: dropDuplicatesWithinWatermark
 
@@ -859,70 +845,6 @@ SELECT event_type,
        CAST(COUNT(DISTINCT user_id) AS BIGINT) AS n_users
 FROM events GROUP BY event_type ORDER BY event_type
 """
-
-
-# staged-chunk cache keyed by (sf_dir, doubled): the chunk content is a
-# pure deterministic function of the input table, so repeated calls in
-# one process (bench median-of-3/5, mirror re-runs) reuse the files and
-# the timed number measures the ENGINE (stream replay + stateful ops),
-# not tmpfile setup. Checkpoint/sink dirs stay fresh per call.
-_EVENT_STAGE_CACHE: dict[tuple[str, bool], str] = {}
-
-
-def stage_event_terciles(spark: SparkSession, sf_dir: str, doubled: bool) -> str:
-    """Stage the events table as THREE chronological single-file parquet
-    chunks (day-tercile cuts, strictly increasing mtimes so the
-    FileStreamSource replay order is pinned — see _order_stage_files).
-    With doubled=True the o12 plant rule applies first (every
-    event_id % 37 == 0 row re-injected at ts + 30 s). Memoized per
-    (sf_dir, doubled); shared by every streaming audit key that replays
-    the events stream (o12, p03, p04, p05, p06)."""
-    import os
-
-    from pyspark.sql import Window
-
-    from pyspark_distributed_kmodes_spark.operators.analytics10 import (
-        _write_single_file,
-    )
-
-    stage = _EVENT_STAGE_CACHE.get((sf_dir, doubled))
-    if stage is not None and os.path.isdir(stage):
-        return stage
-    e = table(spark, sf_dir, "events")
-    src = e
-    if doubled:
-        src = e.unionByName(
-            e.where(F.col("event_id") % 37 == 0).withColumn(
-                "ts", F.col("ts") + F.expr("INTERVAL 30 SECONDS")
-            )
-        )
-    # chronological 3-way split by day terciles (the m02 pattern):
-    # day-dictionary cuts, one single-file chunk each
-    days = src.groupBy(F.date_trunc("day", "ts").alias("d")).agg(
-        F.count(F.lit(1)).cast("bigint").alias("c")
-    )
-    n = src.count()
-    wd = Window.orderBy(F.asc("d"))  # bounded: day dictionary
-    cum = days.select("d", F.sum("c").over(wd).alias("cum")).transform(cut_lineage)
-    cuts = []
-    for k in range(1, 3):
-        row = (
-            cum.where(F.col("cum") >= F.lit(int(-(-(n * k) // 3))))
-            .agg(F.min("d").alias("cut"))
-            .collect()[0]
-        )
-        cuts.append(row["cut"])
-    stage = scratch_dir("evstage")
-    for i in range(3):
-        cond = F.lit(True)
-        if i > 0:
-            cond = cond & (F.date_trunc("day", "ts") >= F.lit(cuts[i - 1]))
-        if i < 2:
-            cond = cond & (F.date_trunc("day", "ts") < F.lit(cuts[i]))
-        _write_single_file(src.where(cond), os.path.join(stage, f"chunk{i}.parquet"))
-    _order_stage_files(stage)
-    _EVENT_STAGE_CACHE[(sf_dir, doubled)] = stage
-    return stage
 
 
 @query(
@@ -960,19 +882,16 @@ def qo12_stream_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> Data
     """
     import os
 
-    stage = stage_event_terciles(spark, sf_dir, doubled=True)
+    stage = stage_event_chunks(spark, sf_dir, doubled=True)
     # honest n_input: count the staged files themselves, per type
-    staged = spark.read.parquet(stage)
-    n_input = staged.groupBy("event_type").agg(
+    n_input = spark.read.parquet(stage).groupBy("event_type").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_input")
     ).transform(cut_lineage)
 
     target_root = scratch_dir("o12_target")
     ckpt = os.path.join(target_root, "ckpt")
     sink = os.path.join(target_root, "survivors")
-    stream = (
-        spark.readStream.schema(staged.schema).option("maxFilesPerTrigger", 1).parquet(stage)
-    )
+    stream = replay_stream(spark, stage)
     drain_available_now(
         # project to the columns the dedup + downstream rollup touch:
         # `value`/`props` (the widest column) otherwise ride through
@@ -986,8 +905,6 @@ def qo12_stream_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> Data
         ckpt,
         "o12",
     )
-    # stage is NOT rmtree'd here: stage_event_terciles' cache reuses it
-    # (scratch_dir removes it at exit)
     survivors = spark.read.parquet(sink)
     per_type = survivors.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_dedup"),
@@ -1201,8 +1118,8 @@ SELECT CAST((SELECT COUNT(*) FROM pairs) AS BIGINT) AS n_matched_pairs,
 @query(
     "qo15_stream_outer_join",
     oracle=_O15_ORACLE,
-    # deliberately NOT bench-flagged: the staging replay (3 single-file
-    # chunk writes) plus three stateful micro-batches costs ~15 s at
+    # deliberately NOT bench-flagged: the first call's staging (3
+    # single-file chunk writes) plus three stateful micro-batches cost ~15 s at
     # sf0.1 standalone — harness replay cost, not operator cost; the
     # number is recorded in ROUND_NOTES and the mirror still runs it
     # at every SF
@@ -1229,37 +1146,14 @@ def qo15_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     user_id only.
     """
     import os
-    import shutil
 
-    from pyspark.sql import Window
-
-    from pyspark_distributed_kmodes_spark.operators.analytics10 import (
-        _time_chunk_files,
-    )
-
-    chunk_files = _time_chunk_files(spark, sf_dir, 3)
-    stage = scratch_dir("o15_stage")
-    for f in chunk_files:
-        shutil.copy(f, stage)
-    _order_stage_files(stage)
-    shutil.rmtree(os.path.dirname(chunk_files[0]), ignore_errors=True)
-    e = table(spark, sf_dir, "events")
+    stage = stage_event_chunks(spark, sf_dir)
     # the audited-click cutoff: final-batch watermark (max ts of
-    # chunks 1-2 minus the delay) minus a 1 h safety margin; chunks
-    # 1-2 = days strictly below the second day-tercile cut
-    days = e.groupBy(F.date_trunc("day", "ts").alias("d")).agg(
-        F.count(F.lit(1)).cast("bigint").alias("c")
-    )
-    n = e.count()
-    wd = Window.orderBy(F.asc("d"))
-    cum = days.select("d", F.sum("c").over(wd).alias("cum")).transform(cut_lineage)
-    d2 = cum.where(F.col("cum") >= F.lit(int(-(-(n * 2) // 3)))).agg(
-        F.min("d").alias("cut")
-    ).collect()[0]["cut"]
-    # the final-batch watermark is the MIN of the two sides' own
-    # watermarks (each tracks its own max event time), over chunks 1-2
+    # chunks 0-1 minus the delay) minus a 1 h safety margin. The
+    # final-batch watermark is the MIN of the two sides' own
+    # watermarks (each tracks its own max event time), over chunks 0-1
     boundary = (
-        e.where(F.date_trunc("day", "ts") < F.lit(d2))
+        spark.read.parquet(*(os.path.join(stage, f"chunk{i}.parquet") for i in (0, 1)))
         .agg(
             F.least(
                 F.max(F.when(F.col("event_type") == "click", F.col("ts"))),
@@ -1269,7 +1163,7 @@ def qo15_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .collect()[0]["m"]
     )
 
-    src = spark.readStream.schema(e.schema).option("maxFilesPerTrigger", 1).parquet(stage)
+    src = replay_stream(spark, stage)
     clicks = (
         src.where(F.col("event_type") == "click")
         .select(
@@ -1302,7 +1196,6 @@ def qo15_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         os.path.join(target_root, "ckpt"),
         "o15",
     )
-    shutil.rmtree(stage, ignore_errors=True)
     emitted = spark.read.parquet(sink).where(
         F.col("c_ts") + F.expr(f"INTERVAL {_O15_WINDOW_H} HOURS")
         <= F.lit(boundary) - F.expr(f"INTERVAL {_O15_DELAY_H} HOURS") - F.expr("INTERVAL 1 HOUR")
@@ -1367,8 +1260,8 @@ def qo16_statestore_changefeed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STATE-STORE CHANGE FEED under the hash gate (Spark 4
     `format("statestore").option("readChangeFeed", true)`): a streaming
     per-type count+sum runs over THREE chronological micro-batches
-    (maxFilesPerTrigger=1, deterministic replay order via
-    _order_stage_files), then the checkpoint's change feed is read back
+    (the shared stage_event_chunks stage through replay_stream), then
+    the checkpoint's change feed is read back
     — one `update` row per (batch, key) whose state CHANGED in that
     batch, carrying the post-batch cumulative value. The oracle replays
     the batch evolution relationally: day-tercile chunk assignment,
@@ -1388,29 +1281,14 @@ def qo16_statestore_changefeed(spark: SparkSession, sf_dir: str) -> DataFrame:
     checkpoint-sized (batches x keys), independent of data volume.
     """
     import os
-    import shutil
 
-    from pyspark_distributed_kmodes_spark.operators.analytics10 import (
-        _time_chunk_files,
-    )
-
-    chunk_files = _time_chunk_files(spark, sf_dir, 3)
-    stage = scratch_dir("o16_stage")
-    for f in chunk_files:
-        shutil.copy(f, stage)
-    _order_stage_files(stage)
-    shutil.rmtree(os.path.dirname(chunk_files[0]), ignore_errors=True)
-    e = table(spark, sf_dir, "events")
-    e.createOrReplaceTempView("events")
-
-    src = spark.readStream.schema(e.schema).option("maxFilesPerTrigger", 1).parquet(stage)
+    src = replay_stream(spark, stage_event_chunks(spark, sf_dir))
     agg = src.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("cnt"), F.sum("event_id").alias("sm")
     )
     ckpt_root = scratch_dir("o16_ckpt")
     ckpt = os.path.join(ckpt_root, "ck")
     drain_available_now(agg.writeStream.format("noop").outputMode("complete"), ckpt, "o16")
-    shutil.rmtree(stage, ignore_errors=True)
     cf = (
         spark.read.format("statestore")
         .option("readChangeFeed", "true")
@@ -2133,8 +2011,8 @@ def qo26_rocksdb_changelog_checkpoint(spark: SparkSession, sf_dir: str) -> DataF
     uploads only a CHANGELOG of the keys it touched — O(delta) per
     batch instead of a full snapshot — and snapshots are taken
     rarely and asynchronously. A per-type count/user-sum/min runs
-    over THREE chronological micro-batches (deterministic replay via
-    _order_stage_files), so the checkpoint holds a changelog CHAIN
+    over THREE chronological micro-batches (the shared
+    stage_event_chunks stage), so the checkpoint holds a changelog CHAIN
     and, at the default snapshot interval (100 batches), NO zip
     snapshot at all — both facts hard-checked in-query (>= 3
     changelogs present, zero state zips), which forces the state
@@ -2156,26 +2034,10 @@ def qo26_rocksdb_changelog_checkpoint(spark: SparkSession, sf_dir: str) -> DataF
     """
     import glob
     import os
-    import shutil
 
-    from pyspark_distributed_kmodes_spark.operators.analytics10 import (
-        _time_chunk_files,
-    )
-
-    chunk_files = _time_chunk_files(spark, sf_dir, 3)
-    stage = scratch_dir("o26_stage")
-    for f in chunk_files:
-        shutil.copy(f, stage)
-    _order_stage_files(stage)
-    shutil.rmtree(os.path.dirname(chunk_files[0]), ignore_errors=True)
-    e = table(spark, sf_dir, "events")
-
+    stage = stage_event_chunks(spark, sf_dir)
     with scoped_conf(spark, **{_O19_PROVIDER_KEY: _O19_ROCKSDB, _O26_CHANGELOG_KEY: "true"}):
-        src = (
-            spark.readStream.schema(e.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-        )
+        src = replay_stream(spark, stage)
         agg = src.groupBy("event_type").agg(
             F.count(F.lit(1)).alias("cnt"),
             F.sum("user_id").alias("su"),
@@ -2184,7 +2046,6 @@ def qo26_rocksdb_changelog_checkpoint(spark: SparkSession, sf_dir: str) -> DataF
         ckpt_root = scratch_dir("o26_ckpt")
         ckpt = os.path.join(ckpt_root, "ck")
         drain_available_now(agg.writeStream.format("noop").outputMode("complete"), ckpt, "o26")
-        shutil.rmtree(stage, ignore_errors=True)
         changelogs = glob.glob(os.path.join(ckpt, "state", "0", "*", "*.changelog"))
         zips = glob.glob(os.path.join(ckpt, "state", "0", "*", "*.zip"))
         # a changelog CHAIN and no snapshot => the read below can only

@@ -102,7 +102,13 @@ from pyspark_distributed_kmodes_spark.operators.analytics4 import _md5fold, _sql
 from pyspark_distributed_kmodes_spark.registry import query
 from pyspark_distributed_kmodes_spark.session import scratch_dir
 from pyspark_distributed_kmodes_spark.sources.tables import table
-from pyspark_distributed_kmodes_spark.streaming.jobs import drain_available_now
+from pyspark_distributed_kmodes_spark.streaming.jobs import (
+    _order_stage_files,
+    _write_single_file,
+    drain_available_now,
+    replay_stream,
+    stage_event_chunks,
+)
 
 # ---------------------------------------------------------------------------
 # p01 — semantic dedup under a fixed coarse quantizer (qb30's hash twin)
@@ -459,7 +465,7 @@ ORDER BY batch
 def qp03_stream_observe_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STREAMING observe() METRICS under the hash gate: the events
     stream replays as three chronological tercile chunks
-    (maxFilesPerTrigger=1, the shared o12 staging), a Dataset.observe
+    (replay_stream over the shared stage_event_chunks stage), a Dataset.observe
     aggregate rides the stream — row count, click count, and a
     DECIMAL-exact value sum per micro-batch — and the per-batch
     readings are collected from the query's progress history
@@ -473,7 +479,7 @@ def qp03_stream_observe_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     Determinism: chunk contents are a pure function of the input (day
     terciles); observe() aggregates run inside the batch plan, so the
     DECIMAL sum is partition-order-free; batches arrive in staged
-    mtime order (strictly increasing — _order_stage_files).
+    mtime order (pinned by stage_event_chunks).
 
     Scale: observe() metrics are computed map-side alongside the
     existing batch work (no extra shuffle, no second scan) and cost
@@ -482,12 +488,9 @@ def qp03_stream_observe_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import os
 
-    from pyspark_distributed_kmodes_spark.operators.analytics12 import stage_event_terciles
-
-    stage = stage_event_terciles(spark, sf_dir, doubled=False)
-    schema = spark.read.parquet(stage).schema
+    stage = stage_event_chunks(spark, sf_dir)
     root = scratch_dir("p03_target")
-    stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(stage)
+    stream = replay_stream(spark, stage)
     obs = stream.observe(
         "audit",
         F.count(F.lit(1)).alias("n_rows"),
@@ -581,15 +584,12 @@ def qp04_stream_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     import datetime
     import os
 
-    from pyspark_distributed_kmodes_spark.operators.analytics12 import stage_event_terciles
-
-    stage = stage_event_terciles(spark, sf_dir, doubled=False)
-    staged = spark.read.parquet(stage)
-    max_ts = staged.agg(F.max("ts")).first()[0]  # bounded scalar
+    stage = stage_event_chunks(spark, sf_dir)
+    max_ts = spark.read.parquet(stage).agg(F.max("ts")).first()[0]  # bounded scalar
     cutoff = max_ts - datetime.timedelta(hours=1, seconds=1)
     root = scratch_dir("p04_target")
     sink = os.path.join(root, "sink")
-    stream = spark.readStream.schema(staged.schema).option("maxFilesPerTrigger", 1).parquet(stage)
+    stream = replay_stream(spark, stage)
     sess = (
         stream.withWatermark("ts", "1 hour")
         .groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
@@ -670,15 +670,12 @@ def qp05_stream_chained_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     import datetime
     import os
 
-    from pyspark_distributed_kmodes_spark.operators.analytics12 import stage_event_terciles
-
-    stage = stage_event_terciles(spark, sf_dir, doubled=False)
-    staged = spark.read.parquet(stage)
-    max_ts = staged.agg(F.max("ts")).first()[0]  # bounded scalar
+    stage = stage_event_chunks(spark, sf_dir)
+    max_ts = spark.read.parquet(stage).agg(F.max("ts")).first()[0]  # bounded scalar
     cutoff = max_ts - datetime.timedelta(minutes=30, seconds=1)
     root = scratch_dir("p05_target")
     sink = os.path.join(root, "sink")
-    stream = spark.readStream.schema(staged.schema).option("maxFilesPerTrigger", 1).parquet(stage)
+    stream = replay_stream(spark, stage)
     hourly = (
         stream.withWatermark("ts", "30 minutes")
         .groupBy(F.window("ts", "1 hour").alias("w1"), "user_id")
@@ -750,18 +747,16 @@ def qp06_stream_dedup_unbounded_state(spark: SparkSession, sf_dir: str) -> DataF
     """
     import os
 
-    from pyspark_distributed_kmodes_spark.operators.analytics12 import stage_event_terciles
-
-    stage = stage_event_terciles(spark, sf_dir, doubled=True)
-    staged = spark.read.parquet(stage)
+    stage = stage_event_chunks(spark, sf_dir, doubled=True)
     n_input = (
-        staged.groupBy("event_type")
+        spark.read.parquet(stage)
+        .groupBy("event_type")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_input"))
         .transform(cut_lineage)
     )
     root = scratch_dir("p06_target")
     sink = os.path.join(root, "survivors")
-    stream = spark.readStream.schema(staged.schema).option("maxFilesPerTrigger", 1).parquet(stage)
+    stream = replay_stream(spark, stage)
     q = drain_available_now(
         stream.dropDuplicates(["event_id"])
         .writeStream.format("parquet")
@@ -845,13 +840,10 @@ def qp07_stream_join_state_reader(spark: SparkSession, sf_dir: str) -> DataFrame
     """
     import os
 
-    from pyspark_distributed_kmodes_spark.operators.analytics12 import stage_event_terciles
-
-    stage = stage_event_terciles(spark, sf_dir, doubled=False)
-    schema = spark.read.parquet(stage).schema
+    stage = stage_event_chunks(spark, sf_dir)
     root = scratch_dir("p07_target")
     ckpt = os.path.join(root, "ckpt")
-    src = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(stage)
+    src = replay_stream(spark, stage)
     clicks = (
         src.where(F.col("event_type") == "click")
         .select(
@@ -1394,16 +1386,13 @@ def qp13_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import os
 
-    from pyspark_distributed_kmodes_spark.operators.analytics12 import stage_event_terciles
-
-    stage = stage_event_terciles(spark, sf_dir, doubled=False)
-    schema = spark.read.parquet(stage).schema
+    stage = stage_event_chunks(spark, sf_dir)
     dim = table(spark, sf_dir, "customer").select(
         F.col("c_custkey"), F.col("c_mktsegment")
     )
     root = scratch_dir("p13_target")
     sink = os.path.join(root, "sink")
-    stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(stage)
+    stream = replay_stream(spark, stage)
     enriched = stream.join(
         F.broadcast(dim), stream["user_id"] == dim["c_custkey"], "inner"
     ).select("event_id", "user_id", "event_type", "c_mktsegment")
@@ -1493,12 +1482,9 @@ def qp14_stateful_timer_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    from pyspark_distributed_kmodes_spark.operators.analytics12 import stage_event_terciles
-
     gap_us = _P14_GAP_MIN * 60 * 1_000_000
-    stage = stage_event_terciles(spark, sf_dir, doubled=False)
-    staged = spark.read.parquet(stage)
-    max_ts = staged.agg(F.max("ts")).first()[0]  # bounded scalar
+    stage = stage_event_chunks(spark, sf_dir)
+    max_ts = spark.read.parquet(stage).agg(F.max("ts")).first()[0]  # bounded scalar
     import datetime
 
     cutoff = max_ts - datetime.timedelta(hours=1, seconds=1)
@@ -1561,7 +1547,7 @@ def qp14_stateful_timer_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     root = scratch_dir("p14_target")
     sink = os.path.join(root, "sink")
-    stream = spark.readStream.schema(staged.schema).option("maxFilesPerTrigger", 1).parquet(stage)
+    stream = replay_stream(spark, stage)
     sess = (
         stream.withWatermark("ts", "1 hour")
         .groupBy("user_id")
@@ -1651,21 +1637,13 @@ def qp15_stream_union_two_sources(spark: SparkSession, sf_dir: str) -> DataFrame
     import datetime
     import os
 
-    from pyspark_distributed_kmodes_spark.operators.analytics12 import (
-        _order_stage_files,
-        stage_event_terciles,
-    )
-
-    stage_a = stage_event_terciles(spark, sf_dir, doubled=False)
-    staged = spark.read.parquet(stage_a)
-    max_a = staged.agg(F.max("ts")).first()[0]  # bounded scalar
+    stage_a = stage_event_chunks(spark, sf_dir)
+    max_a = spark.read.parquet(stage_a).agg(F.max("ts")).first()[0]  # bounded scalar
     cutoff = max_a - datetime.timedelta(hours=1, seconds=1)  # min-of-sources wm - 1 s
     root = scratch_dir("p15_target")
     # source b: the +15 min / +10M replica, staged once per call root
     stage_b = os.path.join(root, "stage_b")
     os.makedirs(stage_b)
-    import shutil as _shutil
-
     for f in sorted(os.listdir(stage_a)):
         if not f.endswith(".parquet"):
             continue
@@ -1677,22 +1655,15 @@ def qp15_stream_union_two_sources(spark: SparkSession, sf_dir: str) -> DataFrame
             "value",
             "props",
         )
-        from pyspark_distributed_kmodes_spark.operators.analytics10 import _write_single_file
-
         _write_single_file(shifted, os.path.join(stage_b, f))
     _order_stage_files(stage_b)
-    schema = staged.schema
     src_a = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage_a)
+        replay_stream(spark, stage_a)
         .select(F.lit("a").alias("src"), "ts", "event_id")
         .withWatermark("ts", "1 hour")
     )
     src_b = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage_b)
+        replay_stream(spark, stage_b)
         .select(F.lit("b").alias("src"), "ts", "event_id")
         .withWatermark("ts", "1 hour")
     )

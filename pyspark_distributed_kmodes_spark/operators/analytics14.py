@@ -197,7 +197,11 @@ from pyspark.sql import functions as F
 from pyspark_distributed_kmodes_spark.registry import query
 from pyspark_distributed_kmodes_spark.session import scoped_conf, scratch_dir
 from pyspark_distributed_kmodes_spark.sources.tables import table
-from pyspark_distributed_kmodes_spark.streaming.jobs import drain_available_now
+from pyspark_distributed_kmodes_spark.streaming.jobs import (
+    drain_available_now,
+    replay_stream,
+    stage_event_chunks,
+)
 
 # ---------------------------------------------------------------------------
 # p18 — LSH bucket assignment audit under deterministic md5-parity planes
@@ -506,11 +510,8 @@ def p20_state_reader_partition_pruning(spark: SparkSession, sf_dir: str) -> Data
     import os
     import time
 
-    from pyspark_distributed_kmodes_spark.operators.analytics12 import stage_event_terciles
-
-    stage = stage_event_terciles(spark, sf_dir, doubled=False)
-    staged = spark.read.parquet(stage)
-    expected_rows = staged.count()  # bounded scalar: completion target
+    stage = stage_event_chunks(spark, sf_dir)
+    expected_rows = spark.read.parquet(stage).count()  # bounded scalar: completion target
     root = scratch_dir("p20_target")
     ckpt = os.path.join(root, "ckpt")
 
@@ -523,12 +524,7 @@ def p20_state_reader_partition_pruning(spark: SparkSession, sf_dir: str) -> Data
         },
     ):
         def _writer():
-            stream = (
-                spark.readStream.schema(staged.schema)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(stage)
-            )
-            agg = stream.groupBy("user_id").agg(
+            agg = replay_stream(spark, stage).groupBy("user_id").agg(
                 F.count(F.lit(1)).cast("bigint").alias("n_events"),
                 F.sum("event_id").cast("bigint").alias("sum_ids"),
             )
@@ -695,10 +691,7 @@ def p21_foreachbatch_multi_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import os
 
-    from pyspark_distributed_kmodes_spark.operators.analytics12 import stage_event_terciles
-
-    stage = stage_event_terciles(spark, sf_dir, doubled=False)
-    staged = spark.read.parquet(stage)
+    stage = stage_event_chunks(spark, sf_dir)
     root = scratch_dir("p21_target")
     sink_a = os.path.join(root, "sink_a")
     sink_b = os.path.join(root, "sink_b")
@@ -727,12 +720,7 @@ def p21_foreachbatch_multi_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         finally:
             batch_df.unpersist()
 
-    stream = (
-        spark.readStream.schema(staged.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
-        .select("ts", "event_type", "value")
-    )
+    stream = replay_stream(spark, stage).select("ts", "event_type", "value")
     drain_available_now(
         stream.writeStream.foreachBatch(fan_out),
         os.path.join(root, "ckpt"),
@@ -1318,21 +1306,18 @@ def p29_join_state_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import os
 
-    from pyspark_distributed_kmodes_spark.operators.analytics12 import stage_event_terciles
-
-    stage = stage_event_terciles(spark, sf_dir, doubled=False)
-    staged = spark.read.parquet(stage)
+    stage = stage_event_chunks(spark, sf_dir)
     root = scratch_dir("p29_target")
     ckpt = os.path.join(root, "ckpt")
     # pin state partitioning (the p20 rule): a vanilla 200-partition
     # session would freeze 200 state partitions into the checkpoint and
     # pay 200-task statestore scans for a 32-core box
     with scoped_conf(spark, **{"spark.sql.shuffle.partitions": "32"}):
-        return _p29_run(spark, stage, staged, ckpt)
+        return _p29_run(spark, stage, ckpt)
 
 
-def _p29_run(spark: SparkSession, stage: str, staged: DataFrame, ckpt: str) -> DataFrame:
-    src = spark.readStream.schema(staged.schema).option("maxFilesPerTrigger", 1).parquet(stage)
+def _p29_run(spark: SparkSession, stage: str, ckpt: str) -> DataFrame:
+    src = replay_stream(spark, stage)
     clicks = (
         src.where(F.col("event_type") == "click")
         .select(
@@ -1695,12 +1680,7 @@ def p33_file_stream_clean_source_archive(spark: SparkSession, sf_dir: str) -> Da
     import os
     import shutil
 
-    from pyspark_distributed_kmodes_spark.operators.analytics12 import (
-        _order_stage_files,
-        stage_event_terciles,
-    )
-
-    shared = stage_event_terciles(spark, sf_dir, doubled=False)
+    shared = stage_event_chunks(spark, sf_dir)
     root = scratch_dir("p33_target")
     src = os.path.join(root, "landing")
     arch = os.path.join(root, "archive")
@@ -1708,7 +1688,6 @@ def p33_file_stream_clean_source_archive(spark: SparkSession, sf_dir: str) -> Da
     for f in sorted(os.listdir(shared)):
         if f.endswith(".parquet"):
             shutil.copy2(os.path.join(shared, f), os.path.join(src, f))
-    _order_stage_files(src)
     n_staged = spark.read.parquet(src).count()  # bounded scalar
     schema = spark.read.parquet(src).schema
     stream = (
@@ -1885,9 +1864,7 @@ def p35_stream_byte_cap_admission(spark: SparkSession, sf_dir: str) -> DataFrame
     """
     import os
 
-    from pyspark_distributed_kmodes_spark.operators.analytics12 import stage_event_terciles
-
-    stage = stage_event_terciles(spark, sf_dir, doubled=False)
+    stage = stage_event_chunks(spark, sf_dir)
     chunks = sorted(
         (
             os.path.join(stage, f)

@@ -100,10 +100,19 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pyspark_distributed_kmodes_spark.functions.deterministic import pround, sql_pround
+from pyspark_distributed_kmodes_spark.operators.analytics12 import (
+    _O19_PROVIDER_KEY,
+    _O19_ROCKSDB,
+    _O26_CHANGELOG_KEY,
+)
 from pyspark_distributed_kmodes_spark.registry import query
 from pyspark_distributed_kmodes_spark.session import scoped_conf, scratch_dir
 from pyspark_distributed_kmodes_spark.sources.tables import table
-from pyspark_distributed_kmodes_spark.streaming.jobs import drain_available_now
+from pyspark_distributed_kmodes_spark.streaming.jobs import (
+    drain_available_now,
+    replay_stream,
+    stage_event_chunks,
+)
 
 # ---------------------------------------------------------------------------
 # z01 — ps.melt + ps.DataFrame.stack (wide-to-long, both reshapes)
@@ -447,23 +456,16 @@ def z05_stream_sink_replay_protocol(spark: SparkSession, sf_dir: str) -> DataFra
     import glob as g
     import os
 
-    from pyspark_distributed_kmodes_spark.operators.analytics12 import stage_event_terciles
     from pyspark_distributed_kmodes_spark.sources import jsonl
 
     jsonl.register(spark)
-    stage = stage_event_terciles(spark, sf_dir, doubled=False)
-    staged = spark.read.parquet(stage)
+    stage = stage_event_chunks(spark, sf_dir)
     root = scratch_dir("z05_target")
     sink = os.path.join(root, "sink")
     ckpt = os.path.join(root, "ckpt")
 
     def _run() -> None:
-        src = (
-            spark.readStream.schema(staged.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-            .select("event_id", "event_type")
-        )
+        src = replay_stream(spark, stage).select("event_id", "event_type")
         drain_available_now(src.writeStream.format("jsonl_docs").option("path", sink), ckpt, "z05")
 
     def _ledger_lines() -> int:
@@ -591,15 +593,8 @@ def z06_rocksdb_changelog_join_state(spark: SparkSession, sf_dir: str) -> DataFr
     import os
 
     from pyspark_distributed_kmodes_spark.functions.lineage import cut_lineage
-    from pyspark_distributed_kmodes_spark.operators.analytics12 import (
-        _O19_PROVIDER_KEY,
-        _O19_ROCKSDB,
-        _O26_CHANGELOG_KEY,
-        stage_event_terciles,
-    )
 
-    stage = stage_event_terciles(spark, sf_dir, doubled=False)
-    staged = spark.read.parquet(stage)
+    stage = stage_event_chunks(spark, sf_dir)
     root = scratch_dir("z06_target")
     ckpt = os.path.join(root, "ckpt")
 
@@ -611,11 +606,7 @@ def z06_rocksdb_changelog_join_state(spark: SparkSession, sf_dir: str) -> DataFr
             "spark.sql.shuffle.partitions": "8",
         },
     ):
-        src = (
-            spark.readStream.schema(staged.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-        )
+        src = replay_stream(spark, stage)
         clicks = (
             src.where(F.col("event_type") == "click")
             .select(
@@ -728,27 +719,15 @@ def z07_stream_restart_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import shutil
 
-    from pyspark_distributed_kmodes_spark.operators.analytics10 import (
-        _time_chunk_files,
-    )
-    from pyspark_distributed_kmodes_spark.operators.analytics12 import _order_stage_files
-
-    chunk_files = _time_chunk_files(spark, sf_dir, 4)
-    holding = os.path.dirname(chunk_files[0])
+    shared = stage_event_chunks(spark, sf_dir, 4)
     root = scratch_dir("z07_target")
     stage = os.path.join(root, "stage")
     os.makedirs(stage)
     sink = os.path.join(root, "sink")
     ckpt = os.path.join(root, "ckpt")
-    e_schema = spark.read.parquet(chunk_files[0]).schema
 
     def _run() -> None:
-        src = (
-            spark.readStream.schema(e_schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-            .select("event_id", "event_type", "user_id", "ts")
-        )
+        src = replay_stream(spark, stage).select("event_id", "event_type", "user_id", "ts")
         drain_available_now(src.writeStream.format("parquet").option("path", sink), ckpt, "z07")
 
     def _n_commits() -> int:
@@ -761,17 +740,14 @@ def z07_stream_restart_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     # Phase A: first two chronological tranches
-    for f in chunk_files[:2]:
-        shutil.copy(f, stage)
-    _order_stage_files(stage)
+    for i in (0, 1):
+        shutil.copy2(os.path.join(shared, f"chunk{i}.parquet"), stage)
     _run()
     batches_a = _n_commits()
 
     # backlog lands while the query is down; restart from the SAME ckpt
-    for f in chunk_files[2:]:
-        shutil.copy(f, stage)
-    _order_stage_files(stage)
-    shutil.rmtree(holding, ignore_errors=True)
+    for i in (2, 3):
+        shutil.copy2(os.path.join(shared, f"chunk{i}.parquet"), stage)
     _run()
     batches_b_new = _n_commits() - batches_a
 
@@ -848,19 +824,11 @@ def z08_stream_output_mode_matrix(spark: SparkSession, sf_dir: str) -> DataFrame
     import os
     import uuid
 
-    from pyspark_distributed_kmodes_spark.operators.analytics12 import stage_event_terciles
-
-    stage = stage_event_terciles(spark, sf_dir, doubled=False)
-    staged = spark.read.parquet(stage)
+    stage = stage_event_chunks(spark, sf_dir)
     root = scratch_dir("z08_target")
     tag = uuid.uuid4().hex[:8]
     def _run(mode: str) -> DataFrame:
-        src = (
-            spark.readStream.schema(staged.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-            .withWatermark("ts", "2 hours")
-        )
+        src = replay_stream(spark, stage).withWatermark("ts", "2 hours")
         agg = src.groupBy(F.window("ts", "1 day").alias("w"), "event_type").agg(
             F.count(F.lit(1)).cast("bigint").alias("n_events"),
             F.sum("event_id").cast("bigint").alias("sum_ids"),
@@ -886,7 +854,7 @@ def z08_stream_output_mode_matrix(spark: SparkSession, sf_dir: str) -> DataFrame
         append = _run("append").cache()
         update = _run("update")
 
-        wm = staged.agg(F.max("ts").alias("m")).collect()[0]["m"]  # bounded: 1 row
+        wm = spark.read.parquet(stage).agg(F.max("ts").alias("m")).collect()[0]["m"]  # bounded: 1 row
         import datetime
 
         terminal_wm = wm - datetime.timedelta(hours=2)

@@ -8,15 +8,24 @@ against the events parquet and checks agreement with the batch results.
 
 Every availableNow run in the engine goes through `drain_available_now`,
 the one place that starts such a query and bounds the wait for it.
+Every chronological replay of the events table reads a stage made by
+`stage_event_chunks` (the one place that cuts, writes and mtime-pins
+replay chunks) through `replay_stream` (one file per micro-batch).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+import glob
+import os
+import shutil
+
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
+from pyspark_distributed_kmodes_spark.functions.lineage import cut_lineage
 from pyspark_distributed_kmodes_spark.session import scratch_dir
+from pyspark_distributed_kmodes_spark.sources.tables import table
 
 # Upper bound on one availableNow drain: a wedged stream must fail its
 # query loudly rather than hang the caller (300 s is ~100x qn06's
@@ -46,31 +55,104 @@ def drain_available_now(
     return q
 
 
+def _write_single_file(df: DataFrame, dest: str) -> None:
+    """Materialize df as exactly one parquet file at `dest`."""
+    tmp = scratch_dir("m_chunk")
+    df.coalesce(1).write.mode("overwrite").parquet(tmp)
+    part = glob.glob(os.path.join(tmp, "part-*.parquet"))[0]
+    shutil.copy(part, dest)
+    shutil.rmtree(tmp, ignore_errors=True)
+
+
+def _order_stage_files(stage: str) -> None:
+    """Force the file-stream replay order to match the chronological
+    chunk order: FileStreamSource batches files oldest-mtime-first, and
+    chunks written in quick succession can land with TIED mtimes, making
+    the batch order — and therefore watermark advancement — depend on
+    arbitrary listing order (a 3-chunk jumble advances the watermark
+    early, silently dropping in-order data as 'late'). Strictly
+    increasing mtimes in path order pin the replay deterministically;
+    `shutil.copy2` keeps them, so copies of a stage need no re-pin."""
+    files = sorted(
+        os.path.join(stage, f) for f in os.listdir(stage) if f.endswith(".parquet")
+    )
+    base = os.stat(files[0]).st_mtime
+    for i, f in enumerate(files):
+        os.utime(f, (base + 10.0 * i, base + 10.0 * i))
+
+
+# Stage memo keyed by (sf_dir, n_chunks, doubled): chunk content is a
+# pure deterministic function of the input table, so repeated calls in
+# one process (bench medians, mirror re-runs) reuse the files and a
+# timed replay measures the engine, not staging. Replays read a stage
+# and never write or delete in it; checkpoints and sinks stay fresh
+# per call.
+_EVENT_STAGES: dict[tuple[str, int, bool], str] = {}
+
+
+def stage_event_chunks(
+    spark: SparkSession, sf_dir: str, n_chunks: int = 3, doubled: bool = False
+) -> str:
+    """Stage the events table as `n_chunks` chronological single-file
+    parquet chunks `chunk{i}.parquet` and return the dir.
+
+    The cut is by whole days: chunk k ends before the first day whose
+    cumulative row count reaches ceil(n * k / n_chunks), a day
+    dictionary bounded by the table's span. Production streams arrive
+    time-ordered; this reproduces that arrival order for replay, and
+    `_order_stage_files` pins it. With doubled=True the o12 plant rule
+    applies first: every event_id % 37 == 0 row re-injected at ts + 30 s.
+    `ts` is `sources.tables.table`'s normalized microsecond TIMESTAMP.
+    """
+    key = (sf_dir, n_chunks, doubled)
+    stage = _EVENT_STAGES.get(key)
+    if stage is not None and os.path.isdir(stage):
+        return stage
+    src = table(spark, sf_dir, "events")
+    if doubled:
+        src = src.unionByName(
+            src.where(F.col("event_id") % 37 == 0).withColumn(
+                "ts", F.col("ts") + F.expr("INTERVAL 30 SECONDS")
+            )
+        )
+    day = F.date_trunc("day", "ts")
+    cuts = []
+    if n_chunks > 1:
+        days = src.groupBy(day.alias("d")).agg(F.count(F.lit(1)).cast("bigint").alias("c"))
+        n = src.count()
+        wd = Window.orderBy(F.asc("d"))  # bounded: day dictionary
+        cum = days.select("d", F.sum("c").over(wd).alias("cum")).transform(cut_lineage)
+        for k in range(1, n_chunks):
+            cut = cum.where(F.col("cum") >= F.lit(-(-(n * k) // n_chunks)))
+            cuts.append(cut.agg(F.min("d")).collect()[0][0])
+    stage = scratch_dir("evstage")
+    for i in range(n_chunks):
+        cond = F.lit(True)
+        if i > 0:
+            cond = cond & (day >= F.lit(cuts[i - 1]))
+        if i < n_chunks - 1:
+            cond = cond & (day < F.lit(cuts[i]))
+        _write_single_file(src.where(cond), os.path.join(stage, f"chunk{i}.parquet"))
+    _order_stage_files(stage)
+    _EVENT_STAGES[key] = stage
+    return stage
+
+
+def replay_stream(spark: SparkSession, stage: str) -> DataFrame:
+    """File-source stream over a staged dir, one file per micro-batch
+    in mtime order: the replay every chunk-per-batch oracle assumes."""
+    schema = spark.read.parquet(stage).schema
+    return spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(stage)
+
+
 def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """File-source stream over the events parquet.
+    """File-source stream over the whole events table in one micro-batch.
 
     FileStreamSource requires a DIRECTORY (it tails new files), so the
-    single parquet file is staged into a temp dir — in production the
-    source is simply the landing directory. The schema must be declared
-    up front; ts arrives as nanosecond int64 (see sources.tables) and is
-    converted to a microsecond timestamp in-stream.
+    table is staged as one chunk; in production the source is simply
+    the landing directory.
     """
-    import shutil
-
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    stage = scratch_dir("events_stream")
-    shutil.copy(f"{sf_dir}/events.parquet", stage)
-    stream = spark.readStream.schema(raw_schema).parquet(stage)
-    from pyspark.sql import types as T
-
-    if isinstance(raw_schema["ts"].dataType, T.LongType):
-        stream = stream.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
-    elif isinstance(raw_schema["ts"].dataType, T.TimestampNTZType):
-        # TIMESTAMP(MICROS) parquet without UTC adjustment arrives as NTZ;
-        # watermarks require TimestampType — cast is value-preserving
-        # because the session timezone is pinned to UTC.
-        stream = stream.withColumn("ts", F.col("ts").cast(T.TimestampType()))
-    return stream
+    return replay_stream(spark, stage_event_chunks(spark, sf_dir, 1))
 
 
 def tumbling_counts_stream(events: DataFrame, watermark: str = "10 minutes") -> DataFrame:
@@ -281,7 +363,6 @@ def upsert_sink_stream(
     table would permanently lack it. For non-aggregate streams update
     and append deliver identical rows.
     """
-    from pyspark.sql import Window
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         # Hadoop FS handles (work for any supported URI, and avoid the

@@ -21,26 +21,3 @@ def test_queries_are_callables():
     for name, fn in entrymod.queries().items():
         assert callable(fn), name
 
-
-def test_driver_window_is_the_staged_suite():
-    """The driver's CORRECTNESS file covers the first 50 keys in sorted
-    order; the rotation scheme (__spark_entry__.py docstring) promises
-    that window is exactly the never-driver-checked staged suite. Pin
-    it so a mis-rotation (a key accidentally sorting into/out of the
-    window) fails mechanically instead of wasting a driver round.
-    Round 13: the window is o08-o13 + o15-o19 (the 11 oldest round-3
-    rows, ex-qb08-qb13/qb15-qb19, number preserved; qb14 re-entered a
-    window in round 4 under its own key so o14 stays empty) + p18-p56
-    (the round-12 staged suite, 39 keys). Round-13 staging (z01+)
-    sorts after every q* key, outside this full window."""
-    import __spark_entry__ as entrymod
-
-    window = sorted(entrymod.queries())[:50]
-    o_keys = [k for k in window if k.startswith("o") and k[1].isdigit()]
-    p_keys = [k for k in window if k.startswith("p") and k[1].isdigit()]
-    assert len(o_keys) == 11, [k for k in window if k not in o_keys + p_keys]
-    assert len(p_keys) == 39, p_keys
-    o_nums = sorted(int(k[1:3]) for k in o_keys)
-    assert o_nums == list(range(8, 14)) + list(range(15, 20))
-    p_nums = sorted(int(k[1:3]) for k in p_keys)
-    assert p_nums == list(range(18, 57))

@@ -260,7 +260,7 @@ def test_p03_listener_agrees_with_progress(spark, sf_dir):
     from pyspark.sql import functions as F
     from pyspark.sql.streaming import StreamingQueryListener
 
-    from pyspark_distributed_kmodes_spark.operators.analytics12 import stage_event_terciles
+    from pyspark_distributed_kmodes_spark.streaming.jobs import replay_stream, stage_event_chunks
 
     seen = {}
 
@@ -283,10 +283,8 @@ def test_p03_listener_agrees_with_progress(spark, sf_dir):
     listener = L()
     spark.streams.addListener(listener)
     try:
-        stage = stage_event_terciles(spark, "/root/testdata/sf0.001", doubled=False)
-        schema = spark.read.parquet(stage).schema
         root = scratch_dir("p03_listener")
-        stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(stage)
+        stream = replay_stream(spark, stage_event_chunks(spark, sf_dir))
         obs = stream.observe("audit", F.count(F.lit(1)).alias("n_rows"))
         q = (
             obs.writeStream.format("noop")
@@ -432,16 +430,14 @@ def test_p06_state_is_unbounded_vs_o12_bounded(spark, sf_dir, reg):
 
     from pyspark.sql import functions as F
 
-    from pyspark_distributed_kmodes_spark.operators.analytics12 import stage_event_terciles
+    from pyspark_distributed_kmodes_spark.streaming.jobs import replay_stream, stage_event_chunks
 
     rows = reg["qp06_stream_dedup_unbounded_state"].fn(spark, sf_dir).collect()
     n_keys = spark.read.parquet(f"{sf_dir}/events.parquet").select("event_id").distinct().count()
     assert all(r.state_rows == n_keys for r in rows)
     # run the o12-style bounded variant on the same stage and read ITS state
-    stage = stage_event_terciles(spark, sf_dir, doubled=True)
-    schema = spark.read.parquet(stage).schema
     root = scratch_dir("p06_contrast")
-    stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(stage)
+    stream = replay_stream(spark, stage_event_chunks(spark, sf_dir, doubled=True))
     q = (
         stream.withWatermark("ts", "1 hour")
         .dropDuplicatesWithinWatermark(["event_id"])
@@ -927,29 +923,27 @@ def test_p14_timer_fires_for_tail_session(spark):
     assert got == {(100, 2)}
 
 
-def test_tercile_split_implementations_agree(spark, sf_dir):
-    """Two copies of the day-tercile cut algorithm exist
-    (analytics10._time_chunk_files for the m-era replay keys,
-    analytics12.stage_event_terciles for o12/p03-p14); p03's oracle
-    and the p-suite chunk replays assume they produce the SAME split.
-    Pin it: chunk-by-chunk identical event_id sets, so a future edit
-    to one copy's cut rule fails loudly here instead of silently
-    diverging the replays."""
-    from pyspark_distributed_kmodes_spark.operators.analytics10 import _time_chunk_files
-    from pyspark_distributed_kmodes_spark.operators.analytics12 import stage_event_terciles
-
-    a_files = _time_chunk_files(spark, sf_dir, 3)
-    b_stage = stage_event_terciles(spark, sf_dir, doubled=False)
+def test_tercile_split_implementations_agree(spark, sf_dir, duck):
+    """The one stager every chunk replay reads must agree with the
+    Python replay of the day-tercile cut (`_tercile_chunks`, which p03's
+    oracle and the p-suite checks assume): for the plain and the
+    o12-doubled events, chunk by chunk identical event_id multisets,
+    strictly increasing mtimes in path order (the replay order), and
+    one memoized stage per argument set."""
     import os
 
-    b_files = sorted(
-        os.path.join(b_stage, f) for f in os.listdir(b_stage) if f.endswith(".parquet")
-    )
-    assert len(a_files) == len(b_files) == 3
-    for a, b in zip(a_files, b_files):
-        ids_a = {r.event_id for r in spark.read.parquet(a).select("event_id").collect()}
-        ids_b = {r.event_id for r in spark.read.parquet(b).select("event_id").collect()}
-        assert ids_a == ids_b
+    from pyspark_distributed_kmodes_spark.streaming.jobs import stage_event_chunks
+
+    for doubled in (False, True):
+        stage = stage_event_chunks(spark, sf_dir, doubled=doubled)
+        assert stage_event_chunks(spark, sf_dir, doubled=doubled) == stage
+        files = sorted(os.path.join(stage, f) for f in os.listdir(stage))
+        assert [os.path.basename(f) for f in files] == [f"chunk{i}.parquet" for i in range(3)]
+        mtimes = [os.stat(f).st_mtime for f in files]
+        assert all(a < b for a, b in zip(mtimes, mtimes[1:]))
+        for f, chunk in zip(files, _tercile_chunks(duck, doubled)):
+            got = sorted(r.event_id for r in spark.read.parquet(f).select("event_id").collect())
+            assert got == sorted(r[0] for r in chunk)
 
 
 def test_p15_watermark_is_min_of_sources(spark, sf_dir, reg, duck):

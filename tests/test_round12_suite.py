@@ -496,15 +496,27 @@ def test_p33_archive_law(spark, sf_dir, reg):
 
 
 def test_p33_never_consumes_the_shared_staging(spark, sf_dir, reg):
-    """Archiving MUTATES the source dir; the key must work on a private
-    copy — the shared memoized tercile staging must keep all 3 files."""
+    """The memoized chunk stages are shared, so no key may consume,
+    move or delete their files: p33 archives (MUTATES its source dir)
+    and must work on a private copy; qm02 and z07 land copies of the
+    chunks one restart at a time in their own dirs; qo16 and qo26 read
+    the shared stage directly. Afterwards the 3-chunk and 4-chunk
+    stages still hold every chunk file."""
     import os
 
-    from pyspark_distributed_kmodes_spark.operators.analytics12 import stage_event_terciles
+    from pyspark_distributed_kmodes_spark.streaming.jobs import stage_event_chunks
 
-    reg["p33_file_stream_clean_source_archive"].fn(spark, sf_dir).collect()
-    shared = stage_event_terciles(spark, sf_dir, doubled=False)
-    assert len([f for f in os.listdir(shared) if f.endswith(".parquet")]) == 3
+    for key in (
+        "p33_file_stream_clean_source_archive",
+        "qo16_statestore_changefeed",
+        "qo26_rocksdb_changelog_checkpoint",
+        "z07_stream_restart_resume",
+        "qm02_stream_restart_equivalence",
+    ):
+        reg[key].fn(spark, sf_dir).collect()
+    for n_chunks in (3, 4):
+        shared = stage_event_chunks(spark, sf_dir, n_chunks)
+        assert sorted(os.listdir(shared)) == [f"chunk{i}.parquet" for i in range(n_chunks)]
 
 
 # ---------------------------------------------------------------------------
@@ -566,10 +578,10 @@ def test_p35_minimal_cap_degenerates_to_one_file_per_batch(spark, sf_dir):
     progress — three files, three batches."""
     import os
 
-    from pyspark_distributed_kmodes_spark.operators.analytics12 import stage_event_terciles
     from pyspark_distributed_kmodes_spark.session import scratch_dir
+    from pyspark_distributed_kmodes_spark.streaming.jobs import stage_event_chunks
 
-    stage = stage_event_terciles(spark, sf_dir, doubled=False)
+    stage = stage_event_chunks(spark, sf_dir)
     schema = spark.read.parquet(stage).schema
     seen = []
     root = scratch_dir("p35_min")

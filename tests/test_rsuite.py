@@ -117,21 +117,6 @@ def test_o03_xml_roundtrip_escaping(spark):
     )
 
 
-def test_o_keys_fill_window(reg):
-    """Rotation guard (round 13): the round-12 window rotated out
-    (o -> qo number+suffix preserved, p01-p17 -> qp01-qp17) and the
-    window is now o08-o13 + o15-o19 (ex-qb08-qb13/qb15-qb19, the 11
-    oldest round-3 driver rows) + the staged p18-p56 — exactly 50,
-    nothing else. Round-13 staging must use z01+ (sorts after every
-    q* key) so it cannot leak in."""
-    keys = sorted(reg)
-    o_keys = [k for k in keys if k[0] == "o" and k[1].isdigit()]
-    p_keys = [k for k in keys if k[0] == "p" and k[1].isdigit()]
-    assert len(o_keys) == 11, "o-space must be exactly the 11 renamed re-cert rows"
-    assert len(p_keys) == 39
-    assert keys[:50] == o_keys + p_keys
-
-
 def test_o04_sketch_exact_on_bounded_domain(spark, sf_dir, reg, duck):
     """err must be identically 0 (no evictions on a 5-value domain) and
     counts must match a python Counter."""
@@ -577,7 +562,7 @@ def test_o15_outer_null_emission_unit(spark, tmp_path):
         shutil.copy(glob.glob(f"{stage}/c{i}/part-*.parquet")[0], f"{stage}/f{i}.parquet")
         shutil.rmtree(f"{stage}/c{i}")
     chunk1 = frames[0]
-    from pyspark_distributed_kmodes_spark.operators.analytics12 import _order_stage_files
+    from pyspark_distributed_kmodes_spark.streaming.jobs import _order_stage_files
 
     _order_stage_files(stage)
     src = spark.readStream.schema(chunk1.schema).option("maxFilesPerTrigger", 1).parquet(stage)

@@ -1,8 +1,10 @@
-"""The engine's three state primitives: scratch_dir (the only temp-dir
-factory), scoped_conf (the only conf save/restore) and
-drain_available_now (the only bounded availableNow wait).
+"""The engine's state primitives: scratch_dir (the only temp-dir
+factory), scoped_conf (the only conf save/restore),
+drain_available_now (the only bounded availableNow wait) and the
+replay-chunk stager in streaming/jobs.py (the only place that writes
+single-file chunks and pins their mtimes).
 
-The guard test is Spark-free: an AST scan of the package (and, for
+The guard tests are Spark-free: an AST scan of the package (and, for
 temp dirs, of the tests, which take theirs from pytest's tmp_path), so
 names mentioned in docstrings and comments do not count."""
 
@@ -15,9 +17,9 @@ TESTS = pathlib.Path(__file__).resolve().parent
 PKG = TESTS.parent / "pyspark_distributed_kmodes_spark"
 
 
-def _calls(attr: str, root: pathlib.Path = PKG, pattern: str = "**/*.py"):
-    """(file, enclosing function, line) of every call to `<x>.attr(...)`
-    or `attr(...)` in the files under `root` matching `pattern`."""
+def _nodes(match, root: pathlib.Path = PKG, pattern: str = "**/*.py"):
+    """(file, enclosing function, line) of every AST node for which
+    `match(node)` holds, in the files under `root` matching `pattern`."""
     found = []
     for path in sorted(root.glob(pattern)):
         tree = ast.parse(path.read_text(), filename=str(path))
@@ -26,13 +28,30 @@ def _calls(attr: str, root: pathlib.Path = PKG, pattern: str = "**/*.py"):
             node, fn = stack.pop()
             if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
                 fn = node.name
-            if isinstance(node, ast.Call):
-                f = node.func
-                name = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)
-                if name == attr:
-                    found.append((path.relative_to(root).as_posix(), fn, node.lineno))
+            if match(node):
+                found.append((path.relative_to(root).as_posix(), fn, node.lineno))
             stack.extend((child, fn) for child in ast.iter_child_nodes(node))
     return found
+
+
+def _name(node):
+    return node.attr if isinstance(node, ast.Attribute) else getattr(node, "id", None)
+
+
+def _calls(attr: str, root: pathlib.Path = PKG, pattern: str = "**/*.py"):
+    """Every call to `<x>.attr(...)` or `attr(...)` (see `_nodes`)."""
+    return _nodes(lambda n: isinstance(n, ast.Call) and _name(n.func) == attr, root, pattern)
+
+
+def _is_coalesce1_write(node) -> bool:
+    """`<df>.coalesce(1).write`: a single-file parquet write."""
+    return (
+        isinstance(node, ast.Attribute)
+        and node.attr == "write"
+        and isinstance(node.value, ast.Call)
+        and _name(node.value.func) == "coalesce"
+        and [getattr(a, "value", None) for a in node.value.args] == [1]
+    )
 
 
 def test_temp_dirs_and_stream_waits_go_through_one_primitive_each():
@@ -46,6 +65,19 @@ def test_temp_dirs_and_stream_waits_go_through_one_primitive_each():
         if c[:2] != ("streaming/jobs.py", "drain_available_now")
     ]
     assert not waits, f"awaitTermination outside streaming.jobs.drain_available_now: {waits}"
+
+
+def test_replay_chunks_are_written_and_pinned_in_one_module():
+    pins = [c for c in _calls("utime") if c[0] != "streaming/jobs.py"]
+    assert not pins, f"os.utime outside streaming/jobs.py: {pins}"
+    # qp16 pins one writer task to split a sorted run by
+    # maxRecordsPerFile into many files: a sink audit, not a chunk
+    allowed = {
+        ("streaming/jobs.py", "_write_single_file"),
+        ("operators/analytics13.py", "qp16_sorted_run_writer_audit"),
+    }
+    singles = [c for c in _nodes(_is_coalesce1_write) if c[:2] not in allowed]
+    assert not singles, f".coalesce(1).write outside streaming.jobs._write_single_file: {singles}"
 
 
 @pytest.mark.parametrize("fail", [False, True], ids=["normal_exit", "exception"])
